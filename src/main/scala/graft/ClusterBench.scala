@@ -14,6 +14,21 @@ import org.apache.spark.sql.SparkSession
   */
 object ClusterBench {
 
+  /** Executor class path: `java.class.path`, plus the jar or classes
+    * directory this class was loaded from when that is missing from it.
+    * Under spark-submit the app jar comes in through a child class loader,
+    * not the JVM class path, so `java.class.path` alone leaves executors
+    * without the app's classes (same rule as `Bench.spawnClusterPair`).
+    */
+  def executorClassPath: String = {
+    val base = System.getProperty("java.class.path")
+    val self = try {
+      new java.io.File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getAbsolutePath
+    } catch { case _: Exception => "" }
+    if (self.isEmpty || base.split(java.io.File.pathSeparator).contains(self)) base
+    else base + java.io.File.pathSeparator + self
+  }
+
   private def session(workers: Int, coresPer: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -21,7 +36,7 @@ object ClusterBench {
       .master(s"local-cluster[$workers,$coresPer,2048]")
       // real executor heap, not the 1g default (see ClusterPairChild)
       .config("spark.executor.memory", "2048m")
-      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
+      .config("spark.executor.extraClassPath", executorClassPath)
       .config("spark.sql.shuffle.partitions", (workers * coresPer).toString)
       .config("spark.sql.files.maxPartitionBytes", "2m")
       .config("spark.sql.files.openCostInBytes", "65536")

@@ -32,7 +32,7 @@ object DevCluster {
       .master(s"local-cluster[$workers,2,2048]")
       // real executor heap, not the 1g default (see ClusterPairChild)
       .config("spark.executor.memory", "2048m")
-      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
+      .config("spark.executor.extraClassPath", ClusterBench.executorClassPath)
       .config("spark.scheduler.minRegisteredResourcesRatio", "1.0")
       .config("spark.scheduler.maxRegisteredResourcesWaitingTime", "60s")
       .config("spark.sql.shuffle.partitions", (workers * 2).toString)

@@ -32,7 +32,7 @@ object DevSaltCompare {
     if (clusterMode) b
       // real executor heap, not the 1g default (see ClusterPairChild)
       .config("spark.executor.memory", s"${memMb}m")
-      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
+      .config("spark.executor.extraClassPath", ClusterBench.executorClassPath)
       .config("spark.scheduler.minRegisteredResourcesRatio", "1.0")
       .config("spark.scheduler.maxRegisteredResourcesWaitingTime", "60s")
       // match ClusterPairChild's executor sizing (cgroup-model thread pools)

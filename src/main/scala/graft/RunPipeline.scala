@@ -6,13 +6,14 @@ import org.apache.spark.sql.{Encoders, SparkSession}
 /** spark-submit entry point for the production pipeline:
   *
   *   spark-submit --class graft.RunPipeline app.jar \
-  *     <inputParquet> <lineageRoot> <runId> [numPartitions] [nSynthDocs]
+  *     <inputParquet|synth:N> <lineageRoot> <runId> [numPartitions]
   *
   * Reads the interleaved-span table (BASELINE.json input_hint schema),
   * resumes from the lineage root's last committed snapshot, extracts, and
-  * commits output/metrics/manifest atomically. When <inputParquet> is
+  * commits output/metrics/manifest atomically. When the input is
   * "synth:<n>" a deterministic corpus of n docs is generated instead (no
-  * external data).
+  * external data). The one-line JSON run summary is read back from the
+  * metrics table the commit wrote, so the extraction runs once per run.
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
@@ -39,9 +40,9 @@ object RunPipeline {
 
     val store = new ParquetSnapshotStore(lineageRoot)
     val cfg = ExtractPipeline.PipelineConfig(numPartitions = numPartitions)
-    val result = Lineage.run(docs, store, runId, cfg)
+    Lineage.run(docs, store, runId, cfg)
 
-    val m = ExtractPipeline.metrics(result, runId).collect()
+    val m = store.runMetrics(spark, runId).collect()
     val docsN = m.map(_.docs).sum
     val spans = m.map(_.spans).sum
     val fails = m.flatMap(_.failures.toSeq).groupBy(_._1)

@@ -1,8 +1,10 @@
 package graft.pipeline
 
 import graft.core.{Dehyphenator, Extractor}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** The extraction stage (SURVEY §3.1 Spark restatement):
   *
@@ -229,35 +231,31 @@ object ExtractPipeline {
     single.union(salted)
   }
 
-  /** Per-partition metrics (lineage rows). Two cascaded aggregates, both
-    * with map-side partial aggregation: (partition, failure_code) counts
-    * first, then a roll-up to one row per partition whose failure map is
-    * O(|codes|) — a `collect_list` of raw failure strings would be unbounded
-    * on a pathological all-failure partition.
+  /** Per-partition metrics (lineage rows): one narrow `mapPartitions` over
+    * the projected `failure`, `bytes` and `size(spans)` columns folds each
+    * partition locally and keys its row by the task's partition id. The
+    * grouping key is the partition itself, so no exchange is needed; the
+    * failure map holds one entry per distinct code, and an empty partition
+    * emits no row.
     */
   def metrics(result: Dataset[ExtractedDoc], runId: String): Dataset[PartitionMetrics] = {
     val spark = result.sparkSession
     import spark.implicits._
     result
-      .withColumn("partition_id", spark_partition_id())
-      .groupBy(col("partition_id"), col("failure"))
-      .agg(
-        count(lit(1)).as("docs"),
-        sum(col("bytes")).as("bytes"),
-        sum(size(col("spans"))).as("spans"))
-      .groupBy(col("partition_id"))
-      .agg(
-        sum(col("docs")).as("docs"),
-        sum(col("bytes")).as("bytes"),
-        sum(col("spans")).as("spans"),
-        map_from_entries(sort_array(collect_list(
-          when(col("failure") =!= "", struct(col("failure"), col("docs")))
-        ))).as("failures"))
-      .map { row =>
-        PartitionMetrics(runId, row.getAs[Int]("partition_id"),
-          row.getAs[Long]("docs"), row.getAs[Long]("bytes"),
-          row.getAs[Long]("spans"),
-          row.getAs[Map[String, Long]]("failures"))
+      .select(col("failure"), col("bytes"), size(col("spans")))
+      .as[(String, Long, Int)]
+      .mapPartitions { rows =>
+        if (!rows.hasNext) Iterator.empty
+        else {
+          var docs, bytes, spans = 0L
+          val failures = mutable.HashMap.empty[String, Long]
+          rows.foreach { case (failure, b, n) =>
+            docs += 1; bytes += b; spans += n
+            if (failure.nonEmpty) failures(failure) = failures.getOrElse(failure, 0L) + 1
+          }
+          Iterator.single(PartitionMetrics(runId, TaskContext.getPartitionId(),
+            docs, bytes, spans, failures.toMap))
+        }
       }
   }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -19,11 +20,18 @@ import scala.jdk.CollectionConverters._
   * marker and is invisible to readers, so re-running resumes from the last
   * committed snapshot (reference analog: the NATS object-store cache,
   * cache_nats_obj.go:79-110, consulted via conditional GET).
+  *
+  * A commit extracts once: the result is cached for the three writes and
+  * unpersisted after them. Reports about a committed run (the run summary
+  * `RunPipeline` prints) read its metrics table through [[SnapshotStore.runMetrics]]
+  * instead of evaluating the result again.
   */
 trait SnapshotStore {
   def commitRun(runId: String, result: Dataset[ExtractedDoc]): Unit
   def committedDocIds(spark: SparkSession): Dataset[String]
   def committedRuns: Seq[String]
+  /** The per-partition metrics a committed run wrote. */
+  def runMetrics(spark: SparkSession, runId: String): Dataset[PartitionMetrics]
 }
 
 final class ParquetSnapshotStore(root: String) extends SnapshotStore {
@@ -31,14 +39,12 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
   private def p(parts: String*): Path = Paths.get(root, parts: _*)
 
   override def commitRun(runId: String, result: Dataset[ExtractedDoc]): Unit = {
-    val spark = result.sparkSession
-    import spark.implicits._
     val cached = result.persist()
     try {
       cached.write.mode(SaveMode.Overwrite).parquet(p("output", s"run=$runId").toString)
       ExtractPipeline.metrics(cached, runId)
         .write.mode(SaveMode.Overwrite).parquet(p("metrics", s"run=$runId").toString)
-      cached.filter(_.failure == "").map(_.doc_id).toDF("doc_id")
+      cached.where(col("failure") === "").select("doc_id")
         .write.mode(SaveMode.Overwrite).parquet(p("manifest", s"run=$runId").toString)
       // atomic visibility flip: marker write + move
       Files.createDirectories(p("_commits"))
@@ -68,11 +74,21 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
       spark.read.parquet(paths: _*).select("doc_id").as[String].distinct()
     }
   }
+
+  override def runMetrics(spark: SparkSession, runId: String): Dataset[PartitionMetrics] = {
+    require(Files.exists(p("_commits", runId)), s"run $runId is not committed")
+    // the known schema spares a footer-reading job for schema inference
+    val enc = Encoders.product[PartitionMetrics]
+    spark.read.schema(enc.schema).parquet(p("metrics", s"run=$runId").toString).as(enc)
+  }
 }
 
 object Lineage {
   /** Full resumable run: read committed manifest → anti-join → extract →
-    * commit snapshot. Returns the extraction result.
+    * commit snapshot. Returns the extraction result, which the commit has
+    * already unpersisted: evaluating it runs the kernel again. Read what
+    * the run committed through the store instead (`runMetrics`, or the
+    * `output/run=<runId>` table).
     */
   def run(input: Dataset[Doc], store: SnapshotStore, runId: String,
       cfg: ExtractPipeline.PipelineConfig = ExtractPipeline.PipelineConfig()): Dataset[ExtractedDoc] = {

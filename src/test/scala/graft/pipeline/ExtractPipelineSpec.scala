@@ -114,20 +114,35 @@ class ExtractPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("lineage").toString
     val store = new ParquetSnapshotStore(tmp)
+    // the run's metrics table agrees with its committed output
+    def checkRunMetrics(runId: String): Unit = {
+      val out = spark.read.parquet(s"$tmp/output/run=$runId").as[ExtractedDoc].collect()
+      val m = store.runMetrics(spark, runId).collect()
+      assert(m.forall(_.run_id == runId))
+      assert(m.map(_.docs).sum == out.length)
+      assert(m.map(_.bytes).sum == out.map(_.bytes).sum)
+      assert(m.map(_.spans).sum == out.map(_.spans.size.toLong).sum)
+      val fails = m.flatMap(_.failures.toSeq).groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
+      val outFails = out.filter(_.failure.nonEmpty).groupBy(_.failure).view.mapValues(_.length.toLong).toMap
+      assert(fails == outFails)
+    }
     val corpus = SynthCorpus.generate(spark, 100L, seed = 42L, partitions = 4)
     val firstHalf = corpus.filter(d => d.doc_id.drop(3).toLong < 50)
     Lineage.run(firstHalf, store, runId = "r1",
       ExtractPipeline.PipelineConfig(numPartitions = 4))
     assert(store.committedRuns == Seq("r1"))
+    checkRunMetrics("r1")
     val committed = store.committedDocIds(spark).collect().toSet
-    assert(committed.size == 48) // 50 minus the failure-class doc18/doc38... wait: ids 18, 38 fail
+    assert(committed.size == 48) // docs 18 and 38 fail, so 48 of the first 50 commit
     val second = Lineage.run(corpus, store, runId = "r2",
       ExtractPipeline.PipelineConfig(numPartitions = 4))
+    checkRunMetrics("r2")
     val secondIds = second.map(_.doc_id).collect().toSet
     // r2 re-extracts only uncommitted docs (failures retry + the second half)
     assert(secondIds.size == 100 - committed.size)
     assert(committed.intersect(secondIds).isEmpty)
     assert(store.committedRuns == Seq("r1", "r2"))
+    intercept[IllegalArgumentException](store.runMetrics(spark, "r3"))
   }
 
   test("single-scan salting variant is byte-identical to the dual-branch plan") {
@@ -152,5 +167,45 @@ class ExtractPipelineSpec extends AnyFunSuite {
     assert(m.map(_.spans).sum > 0)
     val fails = m.flatMap(_.failures.toSeq).groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
     assert(fails.values.sum == 5) // ids 18,38,58,78,98
+  }
+
+  test("partition-local metrics equal the two-aggregate formula row for row") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // more input partitions than docs leaves some empty; a small threshold
+    // salts the larger multi-span docs into the union's trailing partitions
+    val inputPartitions = 48
+    val cfg = ExtractPipeline.PipelineConfig(numPartitions = 4, megaDocBytes = 2048)
+    val corpus = SynthCorpus.generate(spark, 40L, seed = 42L, partitions = inputPartitions)
+    val result = ExtractPipeline.extract(corpus, cfg).persist()
+    try {
+      // reference: (partition, failure) counts, rolled up per partition
+      val reference = result
+        .withColumn("partition_id", spark_partition_id())
+        .groupBy(col("partition_id"), col("failure"))
+        .agg(
+          count(lit(1)).as("docs"),
+          sum(col("bytes")).as("bytes"),
+          sum(size(col("spans"))).as("spans"))
+        .groupBy(col("partition_id"))
+        .agg(
+          sum(col("docs")).as("docs"),
+          sum(col("bytes")).as("bytes"),
+          sum(col("spans")).as("spans"),
+          map_from_entries(sort_array(collect_list(
+            when(col("failure") =!= "", struct(col("failure"), col("docs")))
+          ))).as("failures"))
+        .as[(Int, Long, Long, Long, Map[String, Long])]
+        .collect().sortBy(_._1).toSeq
+      val local = ExtractPipeline.metrics(result, "t1").collect().sortBy(_.partition_id).toSeq
+      assert(local.forall(_.run_id == "t1"))
+      assert(local.map(m => (m.partition_id, m.docs, m.bytes, m.spans, m.failures)) == reference)
+      // the cases the comparison must cover all occur
+      assert(reference.exists(_._1 >= inputPartitions), "no salted partition")
+      assert(reference.exists(r => r._1 < inputPartitions && r._5.isEmpty), "no all-ok partition")
+      assert(reference.exists(_._5.nonEmpty), "no partition with failures")
+      assert(reference.length < result.rdd.getNumPartitions, "no empty partition")
+      assert(reference.map(_._2).sum == 40)
+    } finally result.unpersist()
   }
 }
