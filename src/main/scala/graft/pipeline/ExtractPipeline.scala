@@ -4,6 +4,7 @@ import graft.core.{Dehyphenator, Extractor}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.CollectionAccumulator
 import scala.collection.mutable
 
 /** The extraction stage (SURVEY §3.1 Spark restatement):
@@ -14,7 +15,11 @@ import scala.collection.mutable
   *     → repartition(hash(doc_id, salt))                    (one shuffle)
   *     → mapPartitions(extract)                             (fused narrow stage)
   *     → regroup salted chunks, replaying cross-chunk dehyphenator state
-  *     → ExtractedDoc + per-partition metrics
+  *     → ExtractedDoc
+  *
+  * A commit ([[ParquetSnapshotStore.commitRun]]) writes the result in one
+  * pass and folds the run's per-partition metrics rows ([[foldMetrics]]) as
+  * the rows stream into that write.
   *
   * The whole per-document kernel ([[graft.core.Extractor]]) runs inside a
   * single typed transform — spans never explode into per-span rows, so the
@@ -231,12 +236,28 @@ object ExtractPipeline {
     single.union(salted)
   }
 
+  /** The metrics row of one partition: docs, bytes, spans and one failure
+    * count per distinct code, keyed by the task's partition id. An empty
+    * partition has no row.
+    */
+  private final class PartitionFold(runId: String) {
+    private var docs, bytes, spans = 0L
+    private val failures = mutable.HashMap.empty[String, Long]
+
+    def add(failure: String, b: Long, n: Int): Unit = {
+      docs += 1; bytes += b; spans += n
+      if (failure.nonEmpty) failures(failure) = failures.getOrElse(failure, 0L) + 1
+    }
+
+    def row: Option[PartitionMetrics] =
+      if (docs == 0) None
+      else Some(PartitionMetrics(runId, TaskContext.getPartitionId(), docs, bytes, spans, failures.toMap))
+  }
+
   /** Per-partition metrics (lineage rows): one narrow `mapPartitions` over
     * the projected `failure`, `bytes` and `size(spans)` columns folds each
-    * partition locally and keys its row by the task's partition id. The
-    * grouping key is the partition itself, so no exchange is needed; the
-    * failure map holds one entry per distinct code, and an empty partition
-    * emits no row.
+    * partition locally. The grouping key is the partition itself, so no
+    * exchange is needed.
     */
   def metrics(result: Dataset[ExtractedDoc], runId: String): Dataset[PartitionMetrics] = {
     val spark = result.sparkSession
@@ -245,17 +266,36 @@ object ExtractPipeline {
       .select(col("failure"), col("bytes"), size(col("spans")))
       .as[(String, Long, Int)]
       .mapPartitions { rows =>
-        if (!rows.hasNext) Iterator.empty
-        else {
-          var docs, bytes, spans = 0L
-          val failures = mutable.HashMap.empty[String, Long]
-          rows.foreach { case (failure, b, n) =>
-            docs += 1; bytes += b; spans += n
-            if (failure.nonEmpty) failures(failure) = failures.getOrElse(failure, 0L) + 1
-          }
-          Iterator.single(PartitionMetrics(runId, TaskContext.getPartitionId(),
-            docs, bytes, spans, failures.toMap))
+        val tally = new PartitionFold(runId)
+        rows.foreach { case (failure, b, n) => tally.add(failure, b, n) }
+        tally.row.iterator
+      }
+  }
+
+  /** `result` unchanged, folding each partition's [[metrics]] row as its
+    * rows pass through. The row goes to `rows` once, when the partition's
+    * iterator is exhausted, so whatever consumes the returned Dataset
+    * (the commit's output write) computes the metrics with no second pass.
+    */
+  private[pipeline] def foldMetrics(result: Dataset[ExtractedDoc], runId: String,
+      rows: CollectionAccumulator[PartitionMetrics]): Dataset[ExtractedDoc] = {
+    val spark = result.sparkSession
+    import spark.implicits._
+    result.mapPartitions { docs =>
+      val tally = new PartitionFold(runId)
+      var done = false
+      new Iterator[ExtractedDoc] {
+        def hasNext: Boolean = {
+          val more = docs.hasNext
+          if (!more && !done) { done = true; tally.row.foreach(rows.add(_)) }
+          more
+        }
+        def next(): ExtractedDoc = {
+          val d = docs.next()
+          tally.add(d.failure, d.bytes, d.spans.size)
+          d
         }
       }
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.util.CollectionAccumulator
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -21,10 +22,12 @@ import scala.jdk.CollectionConverters._
   * committed snapshot (reference analog: the NATS object-store cache,
   * cache_nats_obj.go:79-110, consulted via conditional GET).
   *
-  * A commit extracts once: the result is cached for the three writes and
-  * unpersisted after them. Reports about a committed run (the run summary
-  * `RunPipeline` prints) read its metrics table through [[SnapshotStore.runMetrics]]
-  * instead of evaluating the result again.
+  * A commit evaluates the result once, in the output write, and caches
+  * nothing: each partition's metrics row is folded as its rows stream into
+  * that write, and the manifest is read back from the committed output. A
+  * committed run is never rewritten. Reports about a committed run (the run
+  * summary `RunPipeline` prints) read its metrics table through
+  * [[SnapshotStore.runMetrics]] instead of evaluating the result again.
   */
 trait SnapshotStore {
   def commitRun(runId: String, result: Dataset[ExtractedDoc]): Unit
@@ -39,19 +42,27 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
   private def p(parts: String*): Path = Paths.get(root, parts: _*)
 
   override def commitRun(runId: String, result: Dataset[ExtractedDoc]): Unit = {
-    val cached = result.persist()
-    try {
-      cached.write.mode(SaveMode.Overwrite).parquet(p("output", s"run=$runId").toString)
-      ExtractPipeline.metrics(cached, runId)
-        .write.mode(SaveMode.Overwrite).parquet(p("metrics", s"run=$runId").toString)
-      cached.where(col("failure") === "").select("doc_id")
-        .write.mode(SaveMode.Overwrite).parquet(p("manifest", s"run=$runId").toString)
-      // atomic visibility flip: marker write + move
-      Files.createDirectories(p("_commits"))
-      val tmp = p("_commits", s".$runId.tmp")
-      Files.write(tmp, Array.emptyByteArray)
-      Files.move(tmp, p("_commits", runId), StandardCopyOption.ATOMIC_MOVE)
-    } finally cached.unpersist()
+    require(!Files.exists(p("_commits", runId)), s"run $runId is already committed")
+    val spark = result.sparkSession
+    val output = p("output", s"run=$runId").toString
+    // Exact: the pass-through runs in the output write's result stage, where
+    // Spark applies each partition's accumulator update once and drops the
+    // updates of failed attempts. (`Dataset.observe` would give one global
+    // aggregate; this table has a row per partition.)
+    val rows = new CollectionAccumulator[PartitionMetrics]
+    spark.sparkContext.register(rows, s"metrics run=$runId")
+    ExtractPipeline.foldMetrics(result, runId, rows)
+      .write.mode(SaveMode.Overwrite).parquet(output)
+    spark.createDataset(rows.value.asScala.toSeq.sortBy(_.partition_id))(Encoders.product[PartitionMetrics])
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(p("metrics", s"run=$runId").toString)
+    spark.read.schema("doc_id STRING, failure STRING").parquet(output)
+      .where(col("failure") === "").select("doc_id")
+      .write.mode(SaveMode.Overwrite).parquet(p("manifest", s"run=$runId").toString)
+    // atomic visibility flip: marker write + move
+    Files.createDirectories(p("_commits"))
+    val tmp = p("_commits", s".$runId.tmp")
+    Files.write(tmp, Array.emptyByteArray)
+    Files.move(tmp, p("_commits", runId), StandardCopyOption.ATOMIC_MOVE)
   }
 
   override def committedRuns: Seq[String] = {
@@ -85,10 +96,10 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
 
 object Lineage {
   /** Full resumable run: read committed manifest → anti-join → extract →
-    * commit snapshot. Returns the extraction result, which the commit has
-    * already unpersisted: evaluating it runs the kernel again. Read what
-    * the run committed through the store instead (`runMetrics`, or the
-    * `output/run=<runId>` table).
+    * commit snapshot. Returns the extraction result, which is not cached:
+    * evaluating it runs the kernel again. Read what the run committed
+    * through the store instead (`runMetrics`, or the `output/run=<runId>`
+    * table).
     */
   def run(input: Dataset[Doc], store: SnapshotStore, runId: String,
       cfg: ExtractPipeline.PipelineConfig = ExtractPipeline.PipelineConfig()): Dataset[ExtractedDoc] = {

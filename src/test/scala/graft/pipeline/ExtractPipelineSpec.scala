@@ -169,16 +169,23 @@ class ExtractPipelineSpec extends AnyFunSuite {
     assert(fails.values.sum == 5) // ids 18,38,58,78,98
   }
 
-  test("partition-local metrics equal the two-aggregate formula row for row") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // more input partitions than docs leaves some empty; a small threshold
-    // salts the larger multi-span docs into the union's trailing partitions
-    val inputPartitions = 48
+  // 40 docs over more input partitions than docs, which leaves some empty;
+  // a small threshold salts the larger multi-span docs into the union's
+  // trailing partitions. The result is persisted, so every use of it sees
+  // the same partitions.
+  private val inputPartitions = 48
+
+  private def withMixedPartitions(body: org.apache.spark.sql.Dataset[ExtractedDoc] => Unit): Unit = {
     val cfg = ExtractPipeline.PipelineConfig(numPartitions = 4, megaDocBytes = 2048)
     val corpus = SynthCorpus.generate(spark, 40L, seed = 42L, partitions = inputPartitions)
     val result = ExtractPipeline.extract(corpus, cfg).persist()
-    try {
+    try body(result) finally result.unpersist()
+  }
+
+  test("partition-local metrics equal the two-aggregate formula row for row") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    withMixedPartitions { result =>
       // reference: (partition, failure) counts, rolled up per partition
       val reference = result
         .withColumn("partition_id", spark_partition_id())
@@ -206,6 +213,62 @@ class ExtractPipelineSpec extends AnyFunSuite {
       assert(reference.exists(_._5.nonEmpty), "no partition with failures")
       assert(reference.length < result.rdd.getNumPartitions, "no empty partition")
       assert(reference.map(_._2).sum == 40)
-    } finally result.unpersist()
+    }
+  }
+
+  test("one-pass commit: metrics table equals metrics(result), manifest equals the clean output") {
+    import spark.implicits._
+    withMixedPartitions { result =>
+      val tmp = java.nio.file.Files.createTempDirectory("lineage").toString
+      val store = new ParquetSnapshotStore(tmp)
+      store.commitRun("c1", result)
+      def key(ms: Seq[PartitionMetrics]) =
+        ms.map(m => (m.partition_id, m.docs, m.bytes, m.spans, m.failures)).sortBy(_._1)
+      val committed = store.runMetrics(spark, "c1").collect().toSeq
+      assert(committed.forall(_.run_id == "c1"))
+      assert(key(committed) == key(ExtractPipeline.metrics(result, "c1").collect().toSeq))
+      val out = spark.read.parquet(s"$tmp/output/run=c1").as[ExtractedDoc].collect()
+      assert(out.length == 40)
+      assert(out.exists(_.failure.nonEmpty), "no failed doc to keep out of the manifest")
+      val manifest = spark.read.parquet(s"$tmp/manifest/run=c1").as[String].collect()
+      assert(manifest.sorted.toSeq == out.filter(_.failure.isEmpty).map(_.doc_id).sorted.toSeq)
+    }
+  }
+
+  test("empty commit: rerunning a fully committed input commits empty tables") {
+    val tmp = java.nio.file.Files.createTempDirectory("lineage").toString
+    val store = new ParquetSnapshotStore(tmp)
+    val cfg = ExtractPipeline.PipelineConfig(numPartitions = 4)
+    // without the failing docs (doc_id % 20 == 18) the first run commits every doc
+    val clean = SynthCorpus.generate(spark, 40L, seed = 42L, partitions = 4)
+      .filter(d => d.doc_id.drop(3).toLong % 20 != 18)
+    Lineage.run(clean, store, "r1", cfg)
+    assert(store.committedDocIds(spark).count() == 38)
+    Lineage.run(clean, store, "r2", cfg)
+    assert(store.committedRuns == Seq("r1", "r2"))
+    assert(spark.read.parquet(s"$tmp/output/run=r2").count() == 0)
+    assert(spark.read.parquet(s"$tmp/manifest/run=r2").count() == 0)
+    assert(store.runMetrics(spark, "r2").count() == 0)
+  }
+
+  test("commitRun refuses a committed run id and still commits a crashed one") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("lineage").toString
+    val store = new ParquetSnapshotStore(tmp)
+    val cfg = ExtractPipeline.PipelineConfig(numPartitions = 2)
+    val corpus = SynthCorpus.generate(spark, 20L, seed = 42L, partitions = 2)
+    def output(runId: String) = spark.read.parquet(s"$tmp/output/run=$runId").as[ExtractedDoc]
+      .collect().map(d => (d.doc_id, d.failure, d.bytes, d.spans.size)).sortBy(_._1).toSeq
+    store.commitRun("r1", ExtractPipeline.extract(corpus.filter(d => d.doc_id.drop(3).toLong < 10), cfg))
+    val before = output("r1")
+    assert(before.length == 10)
+    intercept[IllegalArgumentException](store.commitRun("r1", ExtractPipeline.extract(corpus, cfg)))
+    assert(output("r1") == before)
+    assert(store.committedRuns == Seq("r1"))
+    // a crashed run left a partial output and no marker: committing it again works
+    spark.range(3).write.parquet(s"$tmp/output/run=r2")
+    store.commitRun("r2", ExtractPipeline.extract(corpus, cfg))
+    assert(output("r2").length == 20)
+    assert(store.committedRuns == Seq("r1", "r2"))
   }
 }
