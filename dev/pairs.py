@@ -2,13 +2,15 @@
 """Alternating parent/change pairs of the extraction benchmark.
 
     python3 dev/pairs.py --parent <checkout> --change <checkout> \\
-        --workload <name> --seeds 5001-5010 --seconds 10
+        --workload <name>[,<name>...]|all --seeds 5001-5010 --seconds 10
 
-Runs `perfbench/run.py` (untraced) once per seed in each checkout, one run
-at a time, alternating which side runs first: the parent on even seed
-indices, the change on odd ones. Each run's result JSON goes to stdout as
-one line, then a table per end-to-end metric of the change's
-`BENCHMARK.json` (read only): each side's median and quartiles, the pairs
+For each workload in turn (`all` is every workload of the change's
+`BENCHMARK.json`, in its order), runs `perfbench/run.py` (untraced) once
+per seed in each checkout, one run at a time, alternating which side runs
+first: the parent on even seed indices, the change on odd ones. Each run's
+result JSON goes to stdout as one line. Then, per workload, a table with a
+row per end-to-end metric of the change's `BENCHMARK.json` (read only):
+each side's median and quartiles, the pairs
 the change wins (ties count for neither), the ratio of the medians, whether
 the pair rule holds (wins in at least nine tenths of the pairs and a median
 gain larger than the parent's interquartile range), and `WORSE` where the
@@ -50,29 +52,8 @@ def quartiles(xs):
     return tuple(statistics.quantiles(xs, n=4, method="inclusive"))
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
-    ap.add_argument("--parent", required=True, type=Path)
-    ap.add_argument("--change", required=True, type=Path)
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", required=True, type=seed_range, help="inclusive range, e.g. 5001-5010")
-    ap.add_argument("--seconds", required=True, type=int)
-    a = ap.parse_args()
-    metrics = json.loads((a.change / "BENCHMARK.json").read_text())["end_to_end"]
-
-    sides = {"parent": a.parent, "change": a.change}
-    results = {"parent": [], "change": []}
-    failed = False
-    for i, seed in enumerate(a.seeds):
-        order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
-        for side in order:
-            r = run(sides[side], a.workload, seed, a.seconds)
-            if r is None or not r.get("correct") or r.get("failed"):
-                failed = True
-            print(json.dumps({"side": side, "seed": seed, "workload": a.workload, "result": r}), flush=True)
-            results[side].append(r)
-
-    print(f"\n{a.workload}, {len(a.seeds)} pairs (seeds {a.seeds[0]}-{a.seeds[-1]})")
+def table(workload, seeds, results, metrics):
+    print(f"\n{workload}, {len(seeds)} pairs (seeds {seeds[0]}-{seeds[-1]})")
     print(f"{'metric':22} {'parent q1/median/q3':>30} {'change q1/median/q3':>30} {'wins':>6} {'chg/par':>8}  pair rule")
     for m in metrics:
         name, higher = m["name"], m["better"] == "higher"
@@ -92,6 +73,37 @@ def main():
         worse = (cm < pm * (1 - m["bound"])) if higher else (cm > pm * (1 + m["bound"]))
         print(f"{name:22} {f'{p1:.4g} / {pm:.4g} / {p3:.4g}':>30} {f'{c1:.4g} / {cm:.4g} / {c3:.4g}':>30} "
               f"{f'{wins}/{len(pairs)}':>6} {ratio:8.3f}  {rule}{'  WORSE than bound ' + str(m['bound']) if worse else ''}")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("--parent", required=True, type=Path)
+    ap.add_argument("--change", required=True, type=Path)
+    ap.add_argument("--workload", required=True, help="a workload, a comma list, or all")
+    ap.add_argument("--seeds", required=True, type=seed_range, help="inclusive range, e.g. 5001-5010")
+    ap.add_argument("--seconds", required=True, type=int)
+    a = ap.parse_args()
+    bench = json.loads((a.change / "BENCHMARK.json").read_text())
+    known = [w["name"] for w in bench["workloads"]]
+    workloads = known if a.workload == "all" else a.workload.split(",")
+    if set(workloads) - set(known):
+        ap.error(f"unknown workload in {a.workload}; known: {', '.join(known)}")
+
+    sides = {"parent": a.parent, "change": a.change}
+    results = {w: {"parent": [], "change": []} for w in workloads}
+    failed = False
+    for w in workloads:
+        for i, seed in enumerate(a.seeds):
+            order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+            for side in order:
+                r = run(sides[side], w, seed, a.seconds)
+                if r is None or not r.get("correct") or r.get("failed"):
+                    failed = True
+                print(json.dumps({"side": side, "seed": seed, "workload": w, "result": r}), flush=True)
+                results[w][side].append(r)
+
+    for w in workloads:
+        table(w, a.seeds, results[w], bench["end_to_end"])
     if failed:
         print("pairs: a run failed or a pass failed the output gate (see the result lines above)", file=sys.stderr)
     sys.exit(1 if failed else 0)

@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SparkSessionExtensions installer — enables
   * `spark.sql.extensions=graft.functions.GraftExtensions` on any cluster,
   * injecting the extraction scalar functions into every session
-  * (SURVEY §4: injectFunction path).
+  * (SURVEY §4: injectFunction path) and the AQE runtime rule
+  * [[PruneEmptyUnionChildren]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -32,6 +33,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     })
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectRuntimeOptimizerRule(_ => PruneEmptyUnionChildren)
     ext.injectFunction(fn("dehyphenate",
       classOf[SpanExpressions.Dehyphenate].getName, 2)(
       exprs => SpanExpressions.Dehyphenate(exprs.head, exprs(1))))

@@ -13,9 +13,16 @@ import scala.collection.mutable
   *     → resume anti-join against the committed manifest   (S2/S6 analog)
   *     → cost-aware salting: mega-docs split into contiguous span chunks  (S9 analog)
   *     → repartition(hash(doc_id, salt))                    (one shuffle)
-  *     → mapPartitions(extract)                             (fused narrow stage)
+  *     → map(extract)                                       (fused narrow stage)
   *     → regroup salted chunks, replaying cross-chunk dehyphenator state
   *     → ExtractedDoc
+  *
+  * When no doc is mega, the salted branch costs one routing scan: in a
+  * session with `spark.sql.extensions=graft.functions.GraftExtensions`
+  * (`RunPipeline`'s), the AQE rule
+  * [[graft.functions.PruneEmptyUnionChildren]] sees the spread shuffle come
+  * back empty and drops the chunk kernel, the regroup and the merge from
+  * the plan. Sessions without the extension run the whole branch.
   *
   * A commit ([[ParquetSnapshotStore.commitRun]]) writes the result in one
   * pass and folds the run's per-partition metrics rows ([[foldMetrics]]) as
@@ -187,7 +194,7 @@ object ExtractPipeline {
         .flatMap(d => splitChunks(d, cfg))
         .repartition(cfg.numPartitions, col("doc_id"), col("salt"))
         .as[Chunk]
-        .mapPartitions(it => it.map(c => extractChunk(c, cfg)))
+        .map(c => extractChunk(c, cfg))
         .groupByKey(_.doc_id)
         .mapGroups((id, it) => mergeChunks(id, it.toSeq))
     }
@@ -207,7 +214,10 @@ object ExtractPipeline {
     // costs ~¼ of one kernel pass (Probe: scan 5.5 KB/doc vs kernel 15);
     // if the mega fraction is known to be tiny at the source, partition the
     // table by a size class at write time and this split becomes partition
-    // pruning instead of a second scan.
+    // pruning instead of a second scan. With no mega-doc, that second
+    // (routing) scan is all the salted branch costs in a GraftExtensions
+    // session (see the header); the branch must stay row-level (map, not
+    // mapPartitions) for the extension's AQE rule to drop it.
     val isMega = docBytesCol > cfg.megaDocBytes && size(col("spans")) > 1
 
     // 1a. unsalted majority: ONE fused stage (deserialize → whole kernel →
@@ -229,7 +239,7 @@ object ExtractPipeline {
       .flatMap(d => splitChunks(d, cfg))
       .repartition(cfg.numPartitions, col("doc_id"), col("salt"))
       .as[Chunk]
-      .mapPartitions(it => it.map(c => extractChunk(c, cfg)))
+      .map(c => extractChunk(c, cfg))
       .groupByKey(_.doc_id)
       .mapGroups((id, it) => mergeChunks(id, it.toSeq))
 

@@ -31,6 +31,9 @@ import scala.jdk.CollectionConverters._
   */
 trait SnapshotStore {
   def commitRun(runId: String, result: Dataset[ExtractedDoc]): Unit
+  /** The doc ids of every committed run's manifest, for the resume
+    * anti-join. An id may appear more than once.
+    */
   def committedDocIds(spark: SparkSession): Dataset[String]
   def committedRuns: Seq[String]
   /** The per-partition metrics a committed run wrote. */
@@ -76,13 +79,19 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
     }
   }
 
+  /** Every committed manifest, read with its known schema (no footer job to
+    * infer it) and without a `distinct`: the resume anti-join only asks
+    * whether an id matches, so a duplicate id changes nothing, and leaving
+    * out the distinct leaves the manifest side a scan plus broadcast, with
+    * no exchange.
+    */
   override def committedDocIds(spark: SparkSession): Dataset[String] = {
     import spark.implicits._
     val runs = committedRuns
     if (runs.isEmpty) spark.emptyDataset[String]
     else {
       val paths = runs.map(r => p("manifest", s"run=$r").toString)
-      spark.read.parquet(paths: _*).select("doc_id").as[String].distinct()
+      spark.read.schema("doc_id STRING").parquet(paths: _*).as[String]
     }
   }
 
