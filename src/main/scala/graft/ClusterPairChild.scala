@@ -8,11 +8,10 @@ import org.apache.spark.sql.SparkSession
   * Why a separate process: rounds 3-4 repeatedly saw the in-bench
   * local-cluster section measure a 4-worker level that could not even use
   * its own core budget (~5.9 of ~9.5 busy cores → eff 0.1-0.32), while the
-  * IDENTICAL measurement in a standalone JVM ([[DevCluster]],
-  * [[ClusterBench]]) never reproduced it. The suspects are all
-  * driver-JVM-state: heap/GC pressure accumulated by earlier bench
-  * sections, stale shuffle/broadcast state, executor-launch throttling
-  * against a busy parent. A fresh child per pair removes every one of
+  * IDENTICAL measurement in a standalone JVM never reproduced it. The
+  * suspects are all driver-JVM-state: heap/GC pressure accumulated by
+  * earlier bench sections, stale shuffle/broadcast state, executor-launch
+  * throttling against a busy parent. A fresh child per pair removes every one of
   * them — and is the closer model of the north rule's "spark-submit at N
   * and 4N executors" anyway (fresh driver per submission).
   *

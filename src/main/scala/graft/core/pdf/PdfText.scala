@@ -343,7 +343,7 @@ object PdfText {
     * dict up front (text_extract.go:239-307), but most corpus pages
     * reference a subset of their inherited resource dict's fonts from
     * content — the eager build was the PDF kernel's largest remaining
-    * allocation (~13 KB/doc, round-4 DevAlloc). Parsing only on first Tf
+    * allocation (~13 KB/doc, round-4 measurement). Parsing only on first Tf
     * lookup is observationally identical: an unreferenced font influences
     * nothing but allocation.
     */

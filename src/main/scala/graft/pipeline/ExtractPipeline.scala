@@ -11,7 +11,7 @@ import scala.collection.mutable
   *
   *   input Dataset[Doc]
   *     → resume anti-join against the committed manifest   (S2/S6 analog)
-  *     → cost-aware salting: mega-docs split into contiguous span chunks  (S9 analog)
+  *     → salting: mega-docs split into contiguous span chunks by bytes  (S9 analog)
   *     → repartition(hash(doc_id, salt))                    (one shuffle)
   *     → map(extract)                                       (fused narrow stage)
   *     → regroup salted chunks, replaying cross-chunk dehyphenator state
@@ -38,25 +38,11 @@ object ExtractPipeline {
   final case class PipelineConfig(
       extractor: Extractor.Config = Extractor.Default,
       numPartitions: Int = 32,
-      saltBuckets: Int = 8,
       /** docs whose summed span bytes exceed this are split across tasks */
-      megaDocBytes: Long = 512 * 1024,
-      /** Shuffle the unsalted majority by hash(doc_id) before extraction.
-        * Off by default: a parquet scan already splits by bytes
-        * (maxPartitionBytes), so re-shuffling the whole corpus only pays
-        * when the input layout is skewed in a way the scan can't fix
-        * (e.g. one giant row group of mega docs). The salted minority
-        * always shuffles — that's the point of salting.
-        */
-      repartitionSingles: Boolean = false,
-      /** Route EVERY doc through the salt shuffle in one input scan instead
-        * of the default two-branch plan (unsalted majority fused over the
-        * scan + salted minority through the shuffle). Trade measured at
-        * bench scale (see BASELINE.md): single-scan reads the input once
-        * but pays two full-corpus shuffles (chunk spread + regroup);
-        * dual-branch reads twice but shuffles only the mega minority.
-        */
-      singleScan: Boolean = false)
+      megaDocBytes: Long = 512 * 1024)
+
+  /** Most chunks one mega-doc is split into. */
+  val SaltBuckets = 8
 
   /** Salted unit of work: one doc, or one contiguous chunk of a mega-doc's
     * spans.
@@ -71,7 +57,7 @@ object ExtractPipeline {
   def docBytes(spans: Seq[Span]): Long =
     spans.iterator.map(s => s.text.length.toLong + s.media_ref.length).sum
 
-  /** Split a mega-doc's spans into ≤ saltBuckets contiguous chunks of
+  /** Split a mega-doc's spans into ≤ [[SaltBuckets]] contiguous chunks of
     * roughly equal byte cost. Only multi-span docs split (a single binary
     * payload parses atomically); chunk boundaries fall between spans, and
     * never while an OCR transcript is pending (a media span with a recorded
@@ -84,7 +70,7 @@ object ExtractPipeline {
     val sorted = doc.spans.sortBy(_.offset)
     if (bytes <= cfg.megaDocBytes || sorted.length < 2)
       return Seq(Chunk(doc.doc_id, 0, 1, sorted))
-    val n = math.min(cfg.saltBuckets, sorted.length)
+    val n = math.min(SaltBuckets, sorted.length)
     val target = math.max(1L, bytes / n)
     val chunks = Vector.newBuilder[Seq[Span]]
     var cur = Vector.newBuilder[Span]
@@ -176,29 +162,6 @@ object ExtractPipeline {
     val spark = input.sparkSession
     import spark.implicits._
 
-    // Single-scan variant: chunk everything (singles become their own
-    // 1-chunk unit), spread by (doc_id, salt), extract, regroup. One input
-    // scan, but 100% of corpus bytes cross the chunk-spread shuffle and
-    // every doc pays the regroup. MEASURED (DevSaltCompare, BASELINE.md r4):
-    // ~11% FASTER than dual-branch at local[32] on the bench corpus —
-    // in-process shuffle is nearly free, so the saved second scan wins.
-    // Dual-branch stays the default anyway because the decision variable at
-    // real scale is network topology, not local CPU: single-scan moves
-    // ~2× corpus bytes through shuffle (network + shuffle-file disk) while
-    // dual re-reads a columnar, pushdown-pruned scan from a
-    // throughput-optimized store and shuffles only the mega minority.
-    // Flip cfg.singleScan per source: one-pass wins when the input is
-    // per-GET-expensive or the cluster fabric outruns the store.
-    if (cfg.singleScan) {
-      return input
-        .flatMap(d => splitChunks(d, cfg))
-        .repartition(cfg.numPartitions, col("doc_id"), col("salt"))
-        .as[Chunk]
-        .map(c => extractChunk(c, cfg))
-        .groupByKey(_.doc_id)
-        .mapGroups((id, it) => mergeChunks(id, it.toSeq))
-    }
-
     // Routing happens on a COLUMN expression before any deserialization, and
     // before the expensive kernel — each branch extracts only its own rows.
     // Single-span docs can't split regardless of size (binary payloads parse
@@ -206,28 +169,28 @@ object ExtractPipeline {
     //
     // ADR — two branch scans, deliberately: the mega/single split reads the
     // input twice (the routing predicate runs on columnar batches in both).
-    // The alternatives are strictly worse at this corpus shape: caching the
+    // The alternatives are worse at this corpus shape: caching the
     // scan pins the whole corpus in executor memory; salting EVERYTHING
     // funnels 100% of bytes through one shuffle to save a second read of
     // the (usually page-cached / cheap columnar) scan, and the unsalted
     // majority would lose its shuffle-free fused stage. The second scan
-    // costs ~¼ of one kernel pass (Probe: scan 5.5 KB/doc vs kernel 15);
-    // if the mega fraction is known to be tiny at the source, partition the
-    // table by a size class at write time and this split becomes partition
-    // pruning instead of a second scan. With no mega-doc, that second
-    // (routing) scan is all the salted branch costs in a GraftExtensions
-    // session (see the header); the branch must stay row-level (map, not
-    // mapPartitions) for the extension's AQE rule to drop it.
+    // costs ~¼ of one kernel pass (allocation: scan 5.5 KB/doc vs kernel
+    // 15). BASELINE.md rounds 4-5 measured salting everything 11% faster
+    // with an in-JVM shuffle but 18% slower with one executor JVM, and it
+    // shuffles every doc twice, which the runtime pruning below cannot
+    // drop. If the mega fraction is known to be tiny at the source,
+    // partition the table by a size class at write time and this split
+    // becomes partition pruning instead of a second scan. With no mega-doc,
+    // that second (routing) scan is all the salted branch costs in a
+    // GraftExtensions session (see the header); the branch must stay
+    // row-level (map, not mapPartitions) for the extension's AQE rule to
+    // drop it.
     val isMega = docBytesCol > cfg.megaDocBytes && size(col("spans")) > 1
 
     // 1a. unsalted majority: ONE fused stage (deserialize → whole kernel →
-    //     serialize) straight over the scan placement (optional re-hash via
-    //     cfg.repartitionSingles). No intermediate Chunk row.
-    val singles0 = input.where(!isMega)
-    val singles =
-      if (cfg.repartitionSingles) singles0.repartition(cfg.numPartitions, col("doc_id"))
-      else singles0
-    val single = singles.as[Doc].mapPartitions(it => it.map { d =>
+    //     serialize) straight over the scan placement. No intermediate Chunk
+    //     row.
+    val single = input.where(!isMega).mapPartitions(it => it.map { d =>
       mergeChunks(d.doc_id, Seq(extractChunk(
         Chunk(d.doc_id, 0, 1, d.spans.sortBy(_.offset)), cfg)))
     })

@@ -45,6 +45,9 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
   private def p(parts: String*): Path = Paths.get(root, parts: _*)
 
   override def commitRun(runId: String, result: Dataset[ExtractedDoc]): Unit = {
+    // committedRuns skips dot-names, and a separator would nest the marker
+    require(runId.nonEmpty && !runId.startsWith(".") && !runId.exists(c => c == '/' || c == '\\'),
+      s"run id '$runId' must be non-empty, not start with '.', and hold no path separator")
     require(!Files.exists(p("_commits", runId)), s"run $runId is already committed")
     val spark = result.sparkSession
     val output = p("output", s"run=$runId").toString

@@ -23,7 +23,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
 
   test("salting invariance: chunked+merged mega-doc equals unsalted extraction") {
     // force tiny mega threshold so every multi-span doc splits
-    val cfg = ExtractPipeline.PipelineConfig(megaDocBytes = 64, saltBuckets = 4)
+    val cfg = ExtractPipeline.PipelineConfig(megaDocBytes = 64)
     for (id <- 0L until 400L) {
       val doc = SynthCorpus.mkDoc(id, seed = 7L)
       val chunks = ExtractPipeline.splitChunks(doc, cfg)
@@ -52,7 +52,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val mk = (cont: String) => Doc("d", Seq(
       Span("text", "eine Zeile wei-\n", "", 0),
       Span("text", cont + "\n", "", 1)))
-    val cfg = ExtractPipeline.PipelineConfig(megaDocBytes = 4, saltBuckets = 2)
+    val cfg = ExtractPipeline.PipelineConfig(megaDocBytes = 4)
     def runSplit(doc: Doc): String = {
       val chunks = ExtractPipeline.splitChunks(doc, cfg)
       assert(chunks.length == 2, "expected the doc to split")
@@ -72,25 +72,29 @@ class ExtractPipelineSpec extends AnyFunSuite {
   }
 
   test("end-to-end Spark extraction on the synthetic corpus") {
-    import spark.implicits._
     val n = 200L
     val corpus = SynthCorpus.generate(spark, n, seed = 42L, partitions = 4)
-    val result = ExtractPipeline.extract(corpus,
-      ExtractPipeline.PipelineConfig(numPartitions = 4)).collect()
-    assert(result.length == n)
-    // distributed result must equal per-doc local extraction exactly
-    val byId = result.map(d => d.doc_id -> d).toMap
-    for (id <- 0L until n) {
-      val local = extractWhole(SynthCorpus.mkDoc(id, 42L))
-      val dist = byId(s"doc$id")
-      assert(dist.failure == local.failure, s"doc$id failure")
-      assert(dist.spans.map(s => (s.kind, s.text, s.media_ref, s.offset)) ==
-        local.spans.map(s => (s.kind, s.text, s.media_ref, s.offset)), s"doc$id spans")
+    // the default threshold salts nothing; 16 KiB salts the larger docs
+    val salting = ExtractPipeline.PipelineConfig(numPartitions = 4, megaDocBytes = 16 * 1024)
+    assert((0L until n).exists(id => ExtractPipeline.splitChunks(SynthCorpus.mkDoc(id, 42L), salting).length > 1),
+      "no doc splits at 16 KiB")
+    for (cfg <- Seq(ExtractPipeline.PipelineConfig(numPartitions = 4), salting)) {
+      val result = ExtractPipeline.extract(corpus, cfg).collect()
+      assert(result.length == n)
+      // distributed result must equal per-doc local extraction exactly
+      val byId = result.map(d => d.doc_id -> d).toMap
+      for (id <- 0L until n) {
+        val local = extractWhole(SynthCorpus.mkDoc(id, 42L))
+        val dist = byId(s"doc$id")
+        assert(dist.failure == local.failure, s"doc$id failure")
+        assert(dist.spans.map(s => (s.kind, s.text, s.media_ref, s.offset)) ==
+          local.spans.map(s => (s.kind, s.text, s.media_ref, s.offset)), s"doc$id spans")
+      }
+      // failure classes present as designed (doc_id % 20 == 18)
+      assert(result.count(_.failure.nonEmpty) == 10)
+      assert(result.filter(_.failure.nonEmpty).map(_.failure).toSet
+        .subsetOf(Set("zero_size", "unknown_format", "content_not_found")))
     }
-    // failure classes present as designed (doc_id % 20 == 18)
-    assert(result.count(_.failure.nonEmpty) == 10)
-    assert(result.filter(_.failure.nonEmpty).map(_.failure).toSet
-      .subsetOf(Set("zero_size", "unknown_format", "content_not_found")))
   }
 
   test("OCR trigger: recorded transcript emitted before short page text (misc.go:32-77)") {
@@ -143,19 +147,6 @@ class ExtractPipelineSpec extends AnyFunSuite {
     assert(committed.intersect(secondIds).isEmpty)
     assert(store.committedRuns == Seq("r1", "r2"))
     intercept[IllegalArgumentException](store.runMetrics(spark, "r3"))
-  }
-
-  test("single-scan salting variant is byte-identical to the dual-branch plan") {
-    import spark.implicits._
-    val corpus = SynthCorpus.generate(spark, 120L, seed = 42L, partitions = 4)
-    // small threshold so both mega and single docs exercise both plans
-    val base = ExtractPipeline.PipelineConfig(numPartitions = 4, megaDocBytes = 16 * 1024)
-    def key(d: ExtractedDoc) =
-      (d.doc_id, d.failure, d.spans.map(s => (s.kind, s.text, s.media_ref, s.offset)))
-    val dual = ExtractPipeline.extract(corpus, base).collect().map(key).sortBy(_._1)
-    val single = ExtractPipeline.extract(corpus, base.copy(singleScan = true))
-      .collect().map(key).sortBy(_._1)
-    assert(single.toSeq == dual.toSeq)
   }
 
   test("metrics rows aggregate docs/bytes/spans/failures") {
@@ -270,5 +261,16 @@ class ExtractPipelineSpec extends AnyFunSuite {
     store.commitRun("r2", ExtractPipeline.extract(corpus, cfg))
     assert(output("r2").length == 20)
     assert(store.committedRuns == Seq("r1", "r2"))
+  }
+
+  test("commitRun refuses a run id resume could not see or the marker could not name") {
+    val tmp = java.nio.file.Files.createTempDirectory("lineage")
+    val store = new ParquetSnapshotStore(tmp.toString)
+    val result = ExtractPipeline.extract(SynthCorpus.generate(spark, 4L, seed = 42L, partitions = 1),
+      ExtractPipeline.PipelineConfig(numPartitions = 1))
+    for (runId <- Seq(".r1", "a/b", ""))
+      intercept[IllegalArgumentException](store.commitRun(runId, result))
+    assert(!java.nio.file.Files.exists(tmp.resolve("output")))
+    assert(store.committedRuns.isEmpty)
   }
 }
