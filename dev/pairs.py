@@ -13,8 +13,11 @@ row per end-to-end metric of the change's `BENCHMARK.json` (read only):
 each side's median and quartiles, the pairs
 the change wins (ties count for neither), the ratio of the medians, whether
 the pair rule holds (wins in at least nine tenths of the pairs and a median
-gain larger than the parent's interquartile range), and `WORSE` where the
-change's median is worse than the parent's by more than the metric's bound.
+gain larger than the parent's interquartile range), `WORSE` where the
+change's median is worse than the parent's by more than the metric's bound,
+and `UNRESOLVED` where the parent's interquartile range is wider than the
+bound (relative to its median) and not every change run beats every parent
+run: such a spread can hide a move of the size the bound allows.
 Exits non-zero when any run failed or any pass failed the output gate.
 """
 import argparse
@@ -71,8 +74,11 @@ def table(workload, seeds, results, metrics):
         rule = "holds" if wins >= 0.9 * len(pairs) and gain > p3 - p1 else "no"
         ratio = cm / pm if pm else float("nan")
         worse = (cm < pm * (1 - m["bound"])) if higher else (cm > pm * (1 + m["bound"]))
+        separated = min(chg) > max(par) if higher else max(chg) < min(par)
+        unresolved = pm and (p3 - p1) / abs(pm) > m["bound"] and not separated
         print(f"{name:22} {f'{p1:.4g} / {pm:.4g} / {p3:.4g}':>30} {f'{c1:.4g} / {cm:.4g} / {c3:.4g}':>30} "
-              f"{f'{wins}/{len(pairs)}':>6} {ratio:8.3f}  {rule}{'  WORSE than bound ' + str(m['bound']) if worse else ''}")
+              f"{f'{wins}/{len(pairs)}':>6} {ratio:8.3f}  {rule}{'  WORSE than bound ' + str(m['bound']) if worse else ''}"
+              f"{'  UNRESOLVED: parent IQR wider than bound ' + str(m['bound']) if unresolved else ''}")
 
 
 def main():

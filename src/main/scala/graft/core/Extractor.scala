@@ -1,7 +1,5 @@
 package graft.core
 
-import java.util.Base64
-
 /** Per-document extraction kernel: input span sequence → ordered output
   * span sequence + metadata + failure code. Pure Scala, zero Spark deps —
   * the Spark stage wraps this in one mapPartitions (SURVEY §3.1 restatement).
@@ -15,6 +13,10 @@ import java.util.Base64
   *   - `bin`   — binary payload, format sniffed from magic bytes
   *     (docfactory.go:180-206)
   *
+  * Input and output spans are the pipeline's row type
+  * [[graft.pipeline.Span]], so a Spark row's spans go into the kernel and
+  * its result goes into an output row without a copy.
+  *
   * Output spans: `text` spans (one per page/slide for paged formats, one
   * per document otherwise; every page's text ends with '\n' per
   * misc.go:71-74) interleaved with passed-through `media` spans, offsets
@@ -27,7 +29,9 @@ import java.util.Base64
   */
 object Extractor {
 
-  final case class Span(kind: String, text: String, mediaRef: String, offset: Int)
+  // `Extractor.Span` is named only by perfbench's Gate and Ledger.
+  type Span = graft.pipeline.Span
+  val Span = graft.pipeline.Span
 
   /** `pendingHyphenOut` / `sawContent` / `firstContentCp` expose the
     * dehyphenator boundary state so salted mega-document chunks can be
@@ -45,17 +49,12 @@ object Extractor {
   final case class Config(
       removeNewlines: Boolean = true, // TES_REMOVE_NEWLINES default (config.go:60)
       maxFileBytes: Long = 300L * 1024 * 1024, // config.go:34
-      ocrEnabled: Boolean = true,
-      ocrTriggerChars: Int = 200, // misc.go:38
-      /** The HasNewlines() dehyphenation gate (extract.go:173-179,
-        * constructDoc extract.go:256): when false — the reference's
-        * forked-subprocess path, where text arrives pre-extracted — the
-        * dehyphenator (including newline compaction) is bypassed entirely.
-        * All in-process parsers report true, hence the default.
-        */
-      hasNewlines: Boolean = true)
+      ocrEnabled: Boolean = true)
 
   val Default: Config = Config()
+
+  /** Page text shorter than this triggers OCR of the page's media (misc.go:38). */
+  private val OcrTriggerChars = 200
 
   /** MIME sniff by magic bytes — the dispatch analog of
     * docfactory.go:180-206 (mimetype lib there; same formats here).
@@ -128,25 +127,14 @@ object Extractor {
       * gets its '\n' separator before dehyphenation (misc.go:71-74), so the
       * output matches the reference's single-writer stream exactly.
       */
-    def emitPages(pages: Seq[String]): Unit = pages.foreach { p =>
-      noteContent(p + "\n")
-      if (!cfg.hasNewlines) emitText(p + "\n")
-      else {
-        val (t, pend) = Dehyphenator.dehyphenateChunk(p + "\n", cfg.removeNewlines, pendingHyphen)
-        pendingHyphen = pend
-        emitText(t)
-      }
-    }
+    def emitPages(pages: Seq[String]): Unit = pages.foreach(p => emitWhole(p + "\n"))
 
     /** Pageless formats: whole stream through the dehyphenator, one span. */
     def emitWhole(text: String): Unit = {
       noteContent(text)
-      if (!cfg.hasNewlines) emitText(text)
-      else {
-        val (t, pend) = Dehyphenator.dehyphenateChunk(text, cfg.removeNewlines, pendingHyphen)
-        pendingHyphen = pend
-        emitText(t)
-      }
+      val (t, pend) = Dehyphenator.dehyphenateChunk(text, cfg.removeNewlines, pendingHyphen)
+      pendingHyphen = pend
+      emitText(t)
     }
 
     // OCR rule (misc.go:38-40): pending media transcripts emitted before the
@@ -159,11 +147,11 @@ object Extractor {
       val s = arr(i)
       s.kind match {
         case "media" =>
-          out += Span("media", "", s.mediaRef, offset); offset += 1
+          out += Span("media", "", s.media_ref, offset); offset += 1
           if (cfg.ocrEnabled && s.text.nonEmpty) pendingOcr ::= s.text
         case "text" =>
           // raw text span: OCR trigger checks the page text length
-          if (pendingOcr.nonEmpty && s.text.length < cfg.ocrTriggerChars) {
+          if (pendingOcr.nonEmpty && s.text.length < OcrTriggerChars) {
             pendingOcr.reverse.foreach(t => emitWhole(t))
           }
           pendingOcr = Nil
@@ -231,7 +219,7 @@ object Extractor {
                   // downstream media stage, never in the text kernel. Pages
                   // whose images are all unsupported keep the opaque page ref
                   // so the OCR trigger is still visible downstream.
-                  if (txt.length < cfg.ocrTriggerChars && hasImages && cfg.ocrEnabled) {
+                  if (txt.length < OcrTriggerChars && hasImages && cfg.ocrEnabled) {
                     val imgs = graft.core.pdf.PdfImages.pageImageRefs(pf, page)
                     if (imgs.isEmpty) {
                       out += Span("media", "", s"pdf:$docId/page$page/images", offset)

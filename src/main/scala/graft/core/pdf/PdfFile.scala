@@ -454,8 +454,6 @@ final class PdfFile(data: Array[Byte]) {
 
   // ── document structure ─────────────────────────────────────────────────────
 
-  def trailerDict: PdfDict = trailer
-
   /** /Encrypt in the trailer ⇒ content streams are RC4/AES-encrypted.
     * Surfaced as a distinct state so the pipeline can map it to the
     * `encrypted` failure code (parity with the reference's typed errors for

@@ -83,8 +83,6 @@ final class PdfLexer(val data: Array[Byte], var pos: Int) {
     }
   }
 
-  def peek: Int = if (pos < data.length) data(pos) & 0xFF else -1
-
   /** Parse one object at pos (after skipWs). */
   def parseObj(): PdfObj = {
     skipWs()

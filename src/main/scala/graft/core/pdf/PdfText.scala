@@ -253,16 +253,6 @@ object PdfText {
       (w, lastLen)
     }
 
-    def rawStringWidth(b: Array[Byte]): Double = {
-      var total = 0.0
-      var i = 0
-      while (i < b.length) {
-        total += glyphWidth(b, i)
-        i += lastLen
-      }
-      total
-    }
-
     /** decodeBytes (text_extract.go:207-237). */
     def decodeBytes(b: Array[Byte], dst: java.lang.StringBuilder): Unit = {
       ensureCompiled()

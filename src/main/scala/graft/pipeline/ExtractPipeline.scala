@@ -11,11 +11,16 @@ import scala.collection.mutable
   *
   *   input Dataset[Doc]
   *     → resume anti-join against the committed manifest   (S2/S6 analog)
-  *     → salting: mega-docs split into contiguous span chunks by bytes  (S9 analog)
-  *     → repartition(hash(doc_id, salt))                    (one shuffle)
-  *     → map(extract)                                       (fused narrow stage)
-  *     → regroup salted chunks, replaying cross-chunk dehyphenator state
-  *     → ExtractedDoc
+  *     → small docs: kernel → ExtractedDoc                  (fused narrow stage)
+  *     → mega-docs: split into contiguous span chunks by bytes  (S9 analog)
+  *         → repartition(hash(doc_id, salt))                (one shuffle)
+  *         → map(extract)
+  *         → regroup chunks, replaying cross-chunk dehyphenator state
+  *         → ExtractedDoc
+  *
+  * Rows and the kernel share one span type ([[Span]]): a doc's spans go
+  * into [[graft.core.Extractor.extract]] and its result spans into the
+  * output row without a copy.
   *
   * When no doc is mega, the salted branch costs one routing scan: in a
   * session with `spark.sql.extensions=graft.functions.GraftExtensions`
@@ -50,7 +55,7 @@ object ExtractPipeline {
   final case class Chunk(doc_id: String, salt: Int, nChunks: Int, spans: Seq[Span])
 
   final case class ChunkResult(
-      doc_id: String, salt: Int, nChunks: Int,
+      doc_id: String, salt: Int,
       spans: Seq[Span], metadata: Map[String, String], failure: String,
       bytes: Long, pendingOut: Int, sawContent: Boolean, firstCp: Int)
 
@@ -138,12 +143,8 @@ object ExtractPipeline {
   }
 
   private def extractChunk(c: Chunk, cfg: PipelineConfig): ChunkResult = {
-    val r = Extractor.extract(c.doc_id,
-      c.spans.map(s => Extractor.Span(s.kind, s.text, s.media_ref, s.offset)),
-      cfg.extractor)
-    ChunkResult(c.doc_id, c.salt, c.nChunks,
-      r.spans.map(s => Span(s.kind, s.text, s.mediaRef, s.offset)),
-      r.metadata, r.failure, docBytes(c.spans),
+    val r = Extractor.extract(c.doc_id, c.spans, cfg.extractor)
+    ChunkResult(c.doc_id, c.salt, r.spans, r.metadata, r.failure, docBytes(c.spans),
       r.pendingHyphenOut, r.sawContent, r.firstContentCp)
   }
 
@@ -173,12 +174,13 @@ object ExtractPipeline {
     // scan pins the whole corpus in executor memory; salting EVERYTHING
     // funnels 100% of bytes through one shuffle to save a second read of
     // the (usually page-cached / cheap columnar) scan, and the unsalted
-    // majority would lose its shuffle-free fused stage. The second scan
-    // costs ~¼ of one kernel pass (allocation: scan 5.5 KB/doc vs kernel
-    // 15). BASELINE.md rounds 4-5 measured salting everything 11% faster
-    // with an in-JVM shuffle but 18% slower with one executor JVM, and it
-    // shuffles every doc twice, which the runtime pruning below cannot
-    // drop. If the mega fraction is known to be tiny at the source,
+    // majority would lose its shuffle-free fused stage. On `extract_mixed`
+    // (perfbench `--trace 1`, seed 1, 4-core shared VM) the second scan's
+    // stage took 0.32 s of a 2.73 s pass (`stage.salt_spread.run_s` of
+    // `run.pass_s`). BASELINE.md rounds 4-5 measured salting everything
+    // 11% faster with an in-JVM shuffle but 18% slower with one executor
+    // JVM, and it shuffles every doc twice, which the runtime pruning below
+    // cannot drop. If the mega fraction is known to be tiny at the source,
     // partition the table by a size class at write time and this split
     // becomes partition pruning instead of a second scan. With no mega-doc,
     // that second (routing) scan is all the salted branch costs in a
@@ -188,11 +190,12 @@ object ExtractPipeline {
     val isMega = docBytesCol > cfg.megaDocBytes && size(col("spans")) > 1
 
     // 1a. unsalted majority: ONE fused stage (deserialize → whole kernel →
-    //     serialize) straight over the scan placement. No intermediate Chunk
-    //     row.
+    //     serialize) straight over the scan placement. The kernel sorts the
+    //     spans and numbers its output 0..n-1, and a failed doc comes back
+    //     without spans or metadata, so its result is the output row as is.
     val single = input.where(!isMega).mapPartitions(it => it.map { d =>
-      mergeChunks(d.doc_id, Seq(extractChunk(
-        Chunk(d.doc_id, 0, 1, d.spans.sortBy(_.offset)), cfg)))
+      val r = Extractor.extract(d.doc_id, d.spans, cfg.extractor)
+      ExtractedDoc(d.doc_id, r.spans, r.metadata, r.failure, docBytes(d.spans))
     })
 
     // 1b. salted minority: split into contiguous span chunks, spread by

@@ -108,17 +108,13 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
 
 object Lineage {
   /** Full resumable run: read committed manifest → anti-join → extract →
-    * commit snapshot. Returns the extraction result, which is not cached:
-    * evaluating it runs the kernel again. Read what the run committed
-    * through the store instead (`runMetrics`, or the `output/run=<runId>`
-    * table).
+    * commit snapshot. What the run committed is read back through the
+    * store (`runMetrics`, or the `output/run=<runId>` table).
     */
   def run(input: Dataset[Doc], store: SnapshotStore, runId: String,
-      cfg: ExtractPipeline.PipelineConfig = ExtractPipeline.PipelineConfig()): Dataset[ExtractedDoc] = {
+      cfg: ExtractPipeline.PipelineConfig = ExtractPipeline.PipelineConfig()): Unit = {
     val spark = input.sparkSession
     val todo = ExtractPipeline.resume(input, store.committedDocIds(spark))
-    val result = ExtractPipeline.extract(todo, cfg)
-    store.commitRun(runId, result)
-    result
+    store.commitRun(runId, ExtractPipeline.extract(todo, cfg))
   }
 }

@@ -3,9 +3,13 @@ package graft.pipeline
 /** The interleaved text+media document model (BASELINE.json input_hint):
   * input table (doc_id: string,
   *              spans: array<struct<kind, text, media_ref, offset:int>>).
-  * Field names match the parquet schema exactly.
+  * Field names match the parquet schema exactly. The extraction kernel
+  * ([[graft.core.Extractor]]) reads and writes this type too.
   */
-final case class Span(kind: String, text: String, media_ref: String, offset: Int)
+final case class Span(kind: String, text: String, media_ref: String, offset: Int) {
+  // Read only by perfbench's Gate; a method, so not an encoder field.
+  def mediaRef: String = media_ref
+}
 
 final case class Doc(doc_id: String, spans: Seq[Span])
 

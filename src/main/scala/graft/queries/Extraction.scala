@@ -160,22 +160,20 @@ object Extraction {
       SynthCorpus.generate(spark, corpusSize(dir), seed = 42L)
         .map { d =>
           val sorted = d.spans.sortBy(_.offset)
-          val r = graft.core.Extractor.extract(d.doc_id,
-            sorted.map(s => graft.core.Extractor.Span(s.kind, s.text, s.media_ref, s.offset)),
-            DemoCfg.extractor)
+          val r = graft.core.Extractor.extract(d.doc_id, sorted, DemoCfg.extractor)
           val nChunks = ExtractPipeline.splitChunks(d, DemoCfg).length
           val curate: Option[(String, Long, String, Long)] =
             if (r.failure.nonEmpty) None
             else Some(seqCurate(r.spans.iterator.filter(_.kind == "text").map(_.text).mkString("\n")))
           val (ocrImages, ocrBytes) =
             if (r.failure.nonEmpty) (0L, 0L)
-            else seqOcr(d, r.spans.collect { case s if s.kind == "media" => s.mediaRef })
+            else seqOcr(d, r.spans.collect { case s if s.kind == "media" => s.media_ref })
           (d.doc_id, r.spans.size.toLong,
             r.spans.iterator.map(_.text.length.toLong).sum,
             r.spans.count(_.kind == "media").toLong,
             r.failure,
             sorted.filter(_.kind == "media").map(_.media_ref).mkString("|"),
-            r.spans.filter(_.kind == "media").map(_.mediaRef).mkString("|"),
+            r.spans.filter(_.kind == "media").map(_.media_ref).mkString("|"),
             nChunks,
             curate.map(_._1), curate.map(_._2), curate.map(_._3), curate.map(_._4),
             ocrImages, ocrBytes)
@@ -279,7 +277,7 @@ object Extraction {
     * fold it replaces — offsets are unique per doc, and filtering commutes
     * with a sort on a key the filter doesn't touch.
     */
-  private def mediaRefsCol: org.apache.spark.sql.Column =
+  private def joinedMediaRefs: org.apache.spark.sql.Column =
     expr("""array_join(
              transform(
                array_sort(
@@ -291,10 +289,10 @@ object Extraction {
   def extractMediaPassthrough(spark: SparkSession, dir: String): DataFrame = {
     ensureExpectation(spark, dir)
     val inputRefs = corpus(spark, dir).toDF()
-      .select(col("doc_id"), mediaRefsCol.as("in_refs"))
+      .select(col("doc_id"), joinedMediaRefs.as("in_refs"))
     val outRefs = extracted(spark, dir).toDF()
       .where(col("failure") === "")
-      .select(col("doc_id"), mediaRefsCol.as("out_refs"))
+      .select(col("doc_id"), joinedMediaRefs.as("out_refs"))
     inputRefs.join(outRefs, Seq("doc_id"))
       .select(col("doc_id"),
         (col("in_refs") === col("out_refs")).as("refs_preserved"))

@@ -1,6 +1,7 @@
 package graft.core
 
 import java.util.Base64
+import graft.pipeline.Span
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Dispatch additions of round 2: image MIME sniffing (docfactory.go:201-203
@@ -11,7 +12,7 @@ class DispatchSpec extends AnyFunSuite {
 
   private def b64(b: Array[Byte]) = Base64.getEncoder.encodeToString(b)
   private def binDoc(payload: Array[Byte]) =
-    Extractor.extract("d1", Seq(Extractor.Span("bin", b64(payload), "", 0)))
+    Extractor.extract("d1", Seq(Span("bin", b64(payload), "", 0)))
 
   private val pngMagic = Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
   private val images: Seq[(String, Array[Byte])] = Seq(
@@ -39,25 +40,16 @@ class DispatchSpec extends AnyFunSuite {
       val r = binDoc(bytes)
       assert(r.failure == "", ext)
       assert(r.spans.map(_.kind) == Vector("media"), ext)
-      assert(r.spans.head.mediaRef == s"image:d1/span0.$ext", ext)
+      assert(r.spans.head.media_ref == s"image:d1/span0.$ext", ext)
       assert(r.metadata.get("x-doctype").contains(ext), ext)
     }
   }
 
   test("image document without OCR has no parser (reference: tesswrap gate)") {
     val r = Extractor.extract("d1",
-      Seq(Extractor.Span("bin", b64(pngMagic ++ "x".getBytes), "", 0)),
+      Seq(Span("bin", b64(pngMagic ++ "x".getBytes), "", 0)),
       Extractor.Config(ocrEnabled = false))
     assert(r.failure == "unknown_format")
-  }
-
-  test("hasNewlines=false bypasses the dehyphenator (extract.go:173-179)") {
-    val raw = "Stra-\nße bleibt\nroh\n"
-    val doc = Seq(Extractor.Span("text", raw, "", 0))
-    val gated = Extractor.extract("d1", doc, Extractor.Config(hasNewlines = false))
-    assert(gated.spans.head.text == raw) // no dehyphenation, no newline removal
-    val normal = Extractor.extract("d1", doc)
-    assert(normal.spans.head.text == "Straße bleibt roh ")
   }
 
   test("encrypted PDF yields the 'encrypted' failure code") {
@@ -66,10 +58,10 @@ class DispatchSpec extends AnyFunSuite {
     val enc = new String(pdf, "ISO-8859-1")
       .replace("/Root 1 0 R", "/Encrypt 9 0 R /Root 1 0 R")
       .getBytes("ISO-8859-1")
-    val r = Extractor.extract("d1", Seq(Extractor.Span("pdf", b64(enc), "", 0)))
+    val r = Extractor.extract("d1", Seq(Span("pdf", b64(enc), "", 0)))
     assert(r.failure == "encrypted")
     // the unmodified build still extracts
-    val ok = Extractor.extract("d1", Seq(Extractor.Span("pdf", b64(pdf), "", 0)))
+    val ok = Extractor.extract("d1", Seq(Span("pdf", b64(pdf), "", 0)))
     assert(ok.failure == "" && ok.spans.nonEmpty)
   }
 }

@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.pipeline.Span
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
@@ -78,7 +79,7 @@ class DocBinDispatchSpec extends AnyFunSuite {
   test("bin payload sniffs to OLE and extracts doc text via Extractor") {
     val data = Files.readAllBytes(Paths.get("/root/reference/pkg/docparser/testdata/readme.doc"))
     val b64 = java.util.Base64.getEncoder.encodeToString(data)
-    val r = Extractor.extract("d1", Seq(Extractor.Span("bin", b64, "", 0)),
+    val r = Extractor.extract("d1", Seq(Span("bin", b64, "", 0)),
       Extractor.Config(removeNewlines = false))
     assert(r.failure == "")
     assert(r.spans.nonEmpty)
@@ -89,7 +90,7 @@ class DocBinDispatchSpec extends AnyFunSuite {
   test("ppt payload extracts one span per slide via Extractor") {
     val data = Files.readAllBytes(Paths.get("/root/reference/pkg/docparser/testdata/readme.ppt"))
     val b64 = java.util.Base64.getEncoder.encodeToString(data)
-    val r = Extractor.extract("p1", Seq(Extractor.Span("ppt", b64, "", 0)),
+    val r = Extractor.extract("p1", Seq(Span("ppt", b64, "", 0)),
       Extractor.Config(removeNewlines = false))
     assert(r.failure == "")
     assert(r.spans.length > 1)
@@ -101,14 +102,14 @@ class DocBinDispatchSpec extends AnyFunSuite {
 class SizeRejectSpec extends AnyFunSuite {
   test("payload over maxFileBytes rejects as too_large") {
     val big = java.util.Base64.getEncoder.encodeToString(new Array[Byte](2048))
-    val r = Extractor.extract("d", Seq(Extractor.Span("rtf", big, "", 0)),
+    val r = Extractor.extract("d", Seq(Span("rtf", big, "", 0)),
       Extractor.Config(maxFileBytes = 1024))
     assert(r.failure == "too_large")
     assert(r.spans.isEmpty)
   }
 
   test("empty payload rejects as zero_size") {
-    val r = Extractor.extract("d", Seq(Extractor.Span("rtf", "", "", 0)))
+    val r = Extractor.extract("d", Seq(Span("rtf", "", "", 0)))
     assert(r.failure == "zero_size")
   }
 

@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.pipeline.Span
 import org.scalacheck.{Gen, Prop, Properties}
 
 /** ScalaCheck property suites over the pure kernels (SURVEY §5.3). sbt runs
@@ -42,15 +43,15 @@ object DehyphenatorProps extends Properties("Dehyphenator") {
 
 object ExtractorProps extends Properties("Extractor") {
 
-  private val spanGen: Gen[Extractor.Span] = for {
+  private val spanGen: Gen[Span] = for {
     kind <- Gen.oneOf("text", "media", "bin", "rtf")
     text <- Gen.oneOf(Gen.alphaStr,
       Gen.const("""e1xydGYxXGFuc2kgaGVsbG99"""), // b64 of {\rtf1\ansi hello}
       Gen.const(""))
     ref <- Gen.oneOf("", "s3://m/x.png")
-  } yield Extractor.Span(kind, text, if (kind == "media") ref else "", 0)
+  } yield Span(kind, text, if (kind == "media") ref else "", 0)
 
-  private val docGen: Gen[Seq[Extractor.Span]] =
+  private val docGen: Gen[Seq[Span]] =
     Gen.listOf(spanGen).map(_.zipWithIndex.map { case (s, i) => s.copy(offset = i) })
 
   property("never throws; failure codes from the closed set") =
@@ -71,8 +72,8 @@ object ExtractorProps extends Properties("Extractor") {
     Prop.forAll(docGen) { spans =>
       val r = Extractor.extract("p", spans)
       r.failure.nonEmpty ||
-        r.spans.filter(_.kind == "media").map(_.mediaRef) ==
-          spans.sortBy(_.offset).filter(_.kind == "media").map(_.mediaRef)
+        r.spans.filter(_.kind == "media").map(_.media_ref) ==
+          spans.sortBy(_.offset).filter(_.kind == "media").map(_.media_ref)
     }
 }
 

@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.pipeline.Span
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Garbage-tolerance: at corpus scale every format parser sees truncated,
@@ -26,7 +27,7 @@ class RobustnessSpec extends AnyFunSuite {
       rnd.nextBytes(junk)
       val payload = java.util.Base64.getEncoder.encodeToString(magic ++ junk)
       val r = Extractor.extract(s"fuzz$trial",
-        Seq(Extractor.Span("bin", payload, "", 0)))
+        Seq(Span("bin", payload, "", 0)))
       // must return a Result — any failure code (or even success on
       // byte salads that happen to parse) is acceptable; throwing is not
       assert(r != null)
@@ -42,7 +43,7 @@ class RobustnessSpec extends AnyFunSuite {
     for (len <- Seq(1, 8, 64, pdf.length / 4, pdf.length / 2, pdf.length - 10)) {
       val cut = java.util.Arrays.copyOf(pdf, len)
       val r = Extractor.extract("t",
-        Seq(Extractor.Span("pdf", java.util.Base64.getEncoder.encodeToString(cut), "", 0)))
+        Seq(Span("pdf", java.util.Base64.getEncoder.encodeToString(cut), "", 0)))
       assert(r != null)
     }
   }
@@ -59,7 +60,7 @@ class RobustnessSpec extends AnyFunSuite {
     for (len <- Seq(4, 30, docx.length / 2, docx.length - 5)) {
       val cut = java.util.Arrays.copyOf(docx, len)
       val r = Extractor.extract("t",
-        Seq(Extractor.Span("docx", java.util.Base64.getEncoder.encodeToString(cut), "", 0)))
+        Seq(Span("docx", java.util.Base64.getEncoder.encodeToString(cut), "", 0)))
       assert(r != null)
     }
   }
@@ -91,7 +92,7 @@ class RobustnessSpec extends AnyFunSuite {
 
   private def assertNeverThrows(id: String, payload: Array[Byte]): Unit = {
     val r = Extractor.extract(id,
-      Seq(Extractor.Span("pdf", java.util.Base64.getEncoder.encodeToString(payload), "", 0)))
+      Seq(Span("pdf", java.util.Base64.getEncoder.encodeToString(payload), "", 0)))
     assert(r != null)
     if (r.failure.nonEmpty)
       assert(Set("zero_size", "too_large", "unknown_format", "parse_error",
@@ -141,7 +142,7 @@ class RobustnessSpec extends AnyFunSuite {
 
   private def assertNeverThrowsKind(id: String, kind: String, payload: Array[Byte]): Unit = {
     val r = Extractor.extract(id,
-      Seq(Extractor.Span(kind, java.util.Base64.getEncoder.encodeToString(payload), "", 0)))
+      Seq(Span(kind, java.util.Base64.getEncoder.encodeToString(payload), "", 0)))
     assert(r != null)
     if (r.failure.nonEmpty)
       assert(Set("zero_size", "too_large", "unknown_format", "parse_error",
@@ -225,7 +226,7 @@ class RobustnessSpec extends AnyFunSuite {
     val deep = ("%PDF-1.4\n1 0 obj\n" + "[" * 100000 + "]" * 100000 +
       "\nendobj\ntrailer\n<< /Root 1 0 R >>\nstartxref\n9\n%%EOF").getBytes("ISO-8859-1")
     val r = Extractor.extract("deep",
-      Seq(Extractor.Span("pdf", java.util.Base64.getEncoder.encodeToString(deep), "", 0)))
+      Seq(Span("pdf", java.util.Base64.getEncoder.encodeToString(deep), "", 0)))
     assert(r != null)
     assert(r.failure.isEmpty || r.failure == "parse_error")
   }

@@ -108,11 +108,9 @@ class PruneEmptyUnionChildrenSpec extends AnyFunSuite with AdaptiveSparkPlanHelp
     assert(output.map(_.doc_id) == (0L until 40L).map(i => s"doc$i").sorted)
     for (d <- output) {
       val doc = SynthCorpus.mkDoc(d.doc_id.drop(3).toLong, 42L)
-      val r = Extractor.extract(doc.doc_id,
-        doc.spans.map(s => Extractor.Span(s.kind, s.text, s.media_ref, s.offset)))
+      val r = Extractor.extract(doc.doc_id, doc.spans)
       assert(d.failure == r.failure, s"${d.doc_id} failure")
-      assert(d.spans.map(s => (s.kind, s.text, s.media_ref, s.offset)) ==
-        r.spans.map(s => (s.kind, s.text, s.mediaRef, s.offset)), s"${d.doc_id} spans")
+      assert(d.spans == r.spans, s"${d.doc_id} spans")
     }
   }
 

@@ -14,11 +14,8 @@ class ExtractPipelineSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def extractWhole(doc: Doc): ExtractedDoc = {
-    val r = Extractor.extract(doc.doc_id,
-      doc.spans.map(s => Extractor.Span(s.kind, s.text, s.media_ref, s.offset)))
-    ExtractedDoc(doc.doc_id,
-      r.spans.map(s => Span(s.kind, s.text, s.mediaRef, s.offset)),
-      r.metadata, r.failure, ExtractPipeline.docBytes(doc.spans))
+    val r = Extractor.extract(doc.doc_id, doc.spans)
+    ExtractedDoc(doc.doc_id, r.spans, r.metadata, r.failure, ExtractPipeline.docBytes(doc.spans))
   }
 
   test("salting invariance: chunked+merged mega-doc equals unsalted extraction") {
@@ -28,12 +25,9 @@ class ExtractPipelineSpec extends AnyFunSuite {
       val doc = SynthCorpus.mkDoc(id, seed = 7L)
       val chunks = ExtractPipeline.splitChunks(doc, cfg)
       val results = chunks.map { c =>
-        val r = Extractor.extract(c.doc_id,
-          c.spans.map(s => Extractor.Span(s.kind, s.text, s.media_ref, s.offset)))
-        ExtractPipeline.ChunkResult(c.doc_id, c.salt, c.nChunks,
-          r.spans.map(s => Span(s.kind, s.text, s.mediaRef, s.offset)),
-          r.metadata, r.failure, ExtractPipeline.docBytes(c.spans),
-          r.pendingHyphenOut, r.sawContent, r.firstContentCp)
+        val r = Extractor.extract(c.doc_id, c.spans)
+        ExtractPipeline.ChunkResult(c.doc_id, c.salt, r.spans, r.metadata, r.failure,
+          ExtractPipeline.docBytes(c.spans), r.pendingHyphenOut, r.sawContent, r.firstContentCp)
       }
       val merged = ExtractPipeline.mergeChunks(doc.doc_id, results)
       val whole = extractWhole(doc)
@@ -57,12 +51,9 @@ class ExtractPipelineSpec extends AnyFunSuite {
       val chunks = ExtractPipeline.splitChunks(doc, cfg)
       assert(chunks.length == 2, "expected the doc to split")
       val results = chunks.map { c =>
-        val r = Extractor.extract(c.doc_id,
-          c.spans.map(s => Extractor.Span(s.kind, s.text, s.media_ref, s.offset)),
-          Extractor.Config(removeNewlines = false))
-        ExtractPipeline.ChunkResult(c.doc_id, c.salt, c.nChunks,
-          r.spans.map(s => Span(s.kind, s.text, s.mediaRef, s.offset)),
-          r.metadata, r.failure, 0L, r.pendingHyphenOut, r.sawContent, r.firstContentCp)
+        val r = Extractor.extract(c.doc_id, c.spans, Extractor.Config(removeNewlines = false))
+        ExtractPipeline.ChunkResult(c.doc_id, c.salt, r.spans, r.metadata, r.failure, 0L,
+          r.pendingHyphenOut, r.sawContent, r.firstContentCp)
       }
       ExtractPipeline.mergeChunks(doc.doc_id, results)
         .spans.map(_.text).mkString
@@ -138,10 +129,10 @@ class ExtractPipelineSpec extends AnyFunSuite {
     checkRunMetrics("r1")
     val committed = store.committedDocIds(spark).collect().toSet
     assert(committed.size == 48) // docs 18 and 38 fail, so 48 of the first 50 commit
-    val second = Lineage.run(corpus, store, runId = "r2",
+    Lineage.run(corpus, store, runId = "r2",
       ExtractPipeline.PipelineConfig(numPartitions = 4))
     checkRunMetrics("r2")
-    val secondIds = second.map(_.doc_id).collect().toSet
+    val secondIds = spark.read.parquet(s"$tmp/output/run=r2").select("doc_id").as[String].collect().toSet
     // r2 re-extracts only uncommitted docs (failures retry + the second half)
     assert(secondIds.size == 100 - committed.size)
     assert(committed.intersect(secondIds).isEmpty)

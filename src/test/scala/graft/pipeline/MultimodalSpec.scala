@@ -195,9 +195,9 @@ class MultimodalSpec extends AnyFunSuite {
 
     // the extraction kernel surfaces the raster as a per-image media span
     val r = graft.core.Extractor.extract("d9",
-      Seq(graft.core.Extractor.Span("pdf", b64, "", 0)))
-    val mediaRefs = r.spans.filter(_.kind == "media").map(_.mediaRef)
-    assert(mediaRefs == Vector("pdf:d9/page1/ImRGB.png"))
+      Seq(Span("pdf", b64, "", 0)))
+    val refs = r.spans.filter(_.kind == "media").map(_.media_ref)
+    assert(refs == Vector("pdf:d9/page1/ImRGB.png"))
 
     // the media stage materializes bytes under the SAME refs
     val media = Multimodal.pdfMediaRows(Seq(doc).toDS())
