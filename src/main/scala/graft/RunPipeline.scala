@@ -12,8 +12,12 @@ import org.apache.spark.sql.{Encoders, SparkSession}
   * resumes from the lineage root's last committed snapshot, extracts, and
   * commits output/metrics/manifest atomically. When the input is
   * "synth:<n>" a deterministic corpus of n docs is generated instead (no
-  * external data). The one-line JSON run summary is read back from the
-  * metrics table the commit wrote, so the extraction runs once per run.
+  * external data). `numPartitions` (default 32) sets
+  * `spark.sql.shuffle.partitions`: the starting width of the salted
+  * spread shuffle, which AQE coalesces, and the synthetic corpus's
+  * partition count. The one-line JSON run summary ([[summaryLine]]) is
+  * made from the metrics rows the commit returns, so a run adds no job
+  * after its commit and the extraction runs once.
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
@@ -39,15 +43,19 @@ object RunPipeline {
       else spark.read.parquet(input).as[Doc](Encoders.product[Doc])
 
     val store = new ParquetSnapshotStore(lineageRoot)
-    val cfg = ExtractPipeline.PipelineConfig(numPartitions = numPartitions)
-    Lineage.run(docs, store, runId, cfg)
-
-    val m = store.runMetrics(spark, runId).collect()
-    val docsN = m.map(_.docs).sum
-    val spans = m.map(_.spans).sum
-    val fails = m.flatMap(_.failures.toSeq).groupBy(_._1)
-      .map { case (k, v) => s"$k=${v.map(_._2).sum}" }.mkString(",")
-    println(s"""{"run":"$runId","docs":$docsN,"spans":$spans,"failures":"$fails","committed_runs":${store.committedRuns.size}}""")
+    val rows = Lineage.run(docs, store, runId)
+    println(summaryLine(runId, rows, store.committedRuns.size))
     spark.stop()
+  }
+
+  /** The run summary: one JSON line with the run's docs, spans and
+    * `code=count` failures (codes sorted), and how many runs the store has
+    * committed.
+    */
+  def summaryLine(runId: String, rows: Seq[PartitionMetrics], committedRuns: Int): String = {
+    val fails = rows.flatMap(_.failures).groupMapReduce(_._1)(_._2)(_ + _)
+      .toSeq.sorted.map { case (k, n) => s"$k=$n" }.mkString(",")
+    s"""{"run":"$runId","docs":${rows.map(_.docs).sum},"spans":${rows.map(_.spans).sum},""" +
+      s""""failures":"$fails","committed_runs":$committedRuns}"""
   }
 }

@@ -13,9 +13,10 @@ import scala.collection.mutable
   *     → resume anti-join against the committed manifest   (S2/S6 analog)
   *     → small docs: kernel → ExtractedDoc                  (fused narrow stage)
   *     → mega-docs: split into contiguous span chunks by bytes  (S9 analog)
-  *         → repartition(hash(doc_id, salt))                (one shuffle)
+  *         → repartition(hash(doc_id, salt))                (spread shuffle)
   *         → map(extract)
-  *         → regroup chunks, replaying cross-chunk dehyphenator state
+  *         → regroup chunks by doc_id                       (regroup shuffle)
+  *         → merge, replaying cross-chunk dehyphenator state
   *         → ExtractedDoc
   *
   * Rows and the kernel share one span type ([[Span]]): a doc's spans go
@@ -29,19 +30,25 @@ import scala.collection.mutable
   * back empty and drops the chunk kernel, the regroup and the merge from
   * the plan. Sessions without the extension run the whole branch.
   *
-  * A commit ([[ParquetSnapshotStore.commitRun]]) writes the result in one
-  * pass and folds the run's per-partition metrics rows ([[foldMetrics]]) as
-  * the rows stream into that write.
+  * A commit ([[ParquetSnapshotStore.commit]]) writes the result in one
+  * pass. It hands [[extract]] a [[MetricsFold]], which tallies each output
+  * row where the row is made (the unsalted kernel and the salted merge), so
+  * the output write serializes each row once and the run's per-partition
+  * metrics rows come back to the driver with the write.
   *
   * The whole per-document kernel ([[graft.core.Extractor]]) runs inside a
   * single typed transform — spans never explode into per-span rows, so the
-  * only wide operations are the anti-join, the salting shuffle, and the
-  * mega-doc regroup (which touches only the salted minority).
+  * only wide operations are the anti-join and the salted branch's two
+  * shuffles (spread and regroup), which touch only the mega-doc minority.
   */
 object ExtractPipeline {
 
   final case class PipelineConfig(
       extractor: Extractor.Config = Extractor.Default,
+      /** Read by nothing in the pipeline: the salted spread starts at the
+        * session's `spark.sql.shuffle.partitions` and AQE coalesces it.
+        * Kept because `graft.Bench` and perfbench construct it.
+        */
       numPartitions: Int = 32,
       /** docs whose summed span bytes exceed this are split across tasks */
       megaDocBytes: Long = 512 * 1024)
@@ -159,7 +166,15 @@ object ExtractPipeline {
     */
   private def docBytesCol = graft.functions.SpanExpressions.span_byte_cost(col("spans"))
 
-  def extract(input: Dataset[Doc], cfg: PipelineConfig = PipelineConfig()): Dataset[ExtractedDoc] = {
+  def extract(input: Dataset[Doc], cfg: PipelineConfig = PipelineConfig()): Dataset[ExtractedDoc] =
+    extract(input, cfg, identity[ExtractedDoc])
+
+  /** [[extract]], passing each output row through `fold` where the row is
+    * made: in the unsalted kernel's `mapPartitions` and in the salted
+    * `mapGroups` merge. A commit passes its [[MetricsFold]] here.
+    */
+  def extract(input: Dataset[Doc], cfg: PipelineConfig,
+      fold: ExtractedDoc => ExtractedDoc): Dataset[ExtractedDoc] = {
     val spark = input.sparkSession
     import spark.implicits._
 
@@ -186,7 +201,8 @@ object ExtractPipeline {
     // that second (routing) scan is all the salted branch costs in a
     // GraftExtensions session (see the header); the branch must stay
     // row-level (map, not mapPartitions) for the extension's AQE rule to
-    // drop it.
+    // drop it. For the same reason the fold rides inside the merge's
+    // `mapGroups` instead of adding a `mapPartitions` to the branch.
     val isMega = docBytesCol > cfg.megaDocBytes && size(col("spans")) > 1
 
     // 1a. unsalted majority: ONE fused stage (deserialize → whole kernel →
@@ -195,39 +211,23 @@ object ExtractPipeline {
     //     without spans or metadata, so its result is the output row as is.
     val single = input.where(!isMega).mapPartitions(it => it.map { d =>
       val r = Extractor.extract(d.doc_id, d.spans, cfg.extractor)
-      ExtractedDoc(d.doc_id, r.spans, r.metadata, r.failure, docBytes(d.spans))
+      fold(ExtractedDoc(d.doc_id, r.spans, r.metadata, r.failure, docBytes(d.spans)))
     })
 
     // 1b. salted minority: split into contiguous span chunks, spread by
     //     (doc_id, salt) so one mega-doc fans across tasks, extract, then
-    //     regroup + exact merge (cross-chunk dehyphenator replay).
+    //     regroup + exact merge (cross-chunk dehyphenator replay). The
+    //     spread names no partition count: it starts at the session's
+    //     `spark.sql.shuffle.partitions`, and AQE coalesces it to the bytes
+    //     and cores at hand (a `repartition(n, ...)` it would leave at n).
     val salted = input.where(isMega)
       .flatMap(d => splitChunks(d, cfg))
-      .repartition(cfg.numPartitions, col("doc_id"), col("salt"))
-      .as[Chunk]
+      .repartition(col("doc_id"), col("salt"))
       .map(c => extractChunk(c, cfg))
       .groupByKey(_.doc_id)
-      .mapGroups((id, it) => mergeChunks(id, it.toSeq))
+      .mapGroups((id, it) => fold(mergeChunks(id, it.toSeq)))
 
     single.union(salted)
-  }
-
-  /** The metrics row of one partition: docs, bytes, spans and one failure
-    * count per distinct code, keyed by the task's partition id. An empty
-    * partition has no row.
-    */
-  private final class PartitionFold(runId: String) {
-    private var docs, bytes, spans = 0L
-    private val failures = mutable.HashMap.empty[String, Long]
-
-    def add(failure: String, b: Long, n: Int): Unit = {
-      docs += 1; bytes += b; spans += n
-      if (failure.nonEmpty) failures(failure) = failures.getOrElse(failure, 0L) + 1
-    }
-
-    def row: Option[PartitionMetrics] =
-      if (docs == 0) None
-      else Some(PartitionMetrics(runId, TaskContext.getPartitionId(), docs, bytes, spans, failures.toMap))
   }
 
   /** Per-partition metrics (lineage rows): one narrow `mapPartitions` over
@@ -242,36 +242,54 @@ object ExtractPipeline {
       .select(col("failure"), col("bytes"), size(col("spans")))
       .as[(String, Long, Int)]
       .mapPartitions { rows =>
-        val tally = new PartitionFold(runId)
+        val tally = new PartitionFold(runId, TaskContext.getPartitionId())
         rows.foreach { case (failure, b, n) => tally.add(failure, b, n) }
         tally.row.iterator
       }
   }
+}
 
-  /** `result` unchanged, folding each partition's [[metrics]] row as its
-    * rows pass through. The row goes to `rows` once, when the partition's
-    * iterator is exhausted, so whatever consumes the returned Dataset
-    * (the commit's output write) computes the metrics with no second pass.
-    */
-  private[pipeline] def foldMetrics(result: Dataset[ExtractedDoc], runId: String,
-      rows: CollectionAccumulator[PartitionMetrics]): Dataset[ExtractedDoc] = {
-    val spark = result.sparkSession
-    import spark.implicits._
-    result.mapPartitions { docs =>
-      val tally = new PartitionFold(runId)
-      var done = false
-      new Iterator[ExtractedDoc] {
-        def hasNext: Boolean = {
-          val more = docs.hasNext
-          if (!more && !done) { done = true; tally.row.foreach(rows.add(_)) }
-          more
-        }
-        def next(): ExtractedDoc = {
-          val d = docs.next()
-          tally.add(d.failure, d.bytes, d.spans.size)
-          d
-        }
-      }
+/** The metrics row of one partition: docs, bytes, spans and one failure
+  * count per distinct code. An empty partition has no row.
+  */
+private[pipeline] final class PartitionFold(runId: String, partitionId: Int) {
+  private var docs, bytes, spans = 0L
+  private val failures = mutable.HashMap.empty[String, Long]
+
+  def add(failure: String, b: Long, n: Int): Unit = {
+    docs += 1; bytes += b; spans += n
+    if (failure.nonEmpty) failures(failure) = failures.getOrElse(failure, 0L) + 1
+  }
+
+  def row: Option[PartitionMetrics] =
+    if (docs == 0) None
+    else Some(PartitionMetrics(runId, partitionId, docs, bytes, spans, failures.toMap))
+}
+
+/** Tallies the rows passed through it into one [[PartitionMetrics]] row per
+  * task, keyed by the task's partition id, and adds that row to `rows` when
+  * the task completes. A task that passes no row adds none.
+  *
+  * Each task deserializes its own copy of the fold, so `open` is task-local;
+  * it is made on the task's first row. Exact when the fold runs in the
+  * result stage of the action that evaluates it (as in a commit's output
+  * write): Spark applies a result task's accumulator updates once per
+  * partition, and a `CollectionAccumulator` drops the values of failed
+  * attempts. (`Dataset.observe` would give one global aggregate; the
+  * metrics table has a row per partition.)
+  */
+final class MetricsFold private[pipeline] (runId: String, rows: CollectionAccumulator[PartitionMetrics])
+    extends (ExtractedDoc => ExtractedDoc) with Serializable {
+  @transient private var open: PartitionFold = _
+
+  def apply(d: ExtractedDoc): ExtractedDoc = {
+    if (open == null) {
+      val task = TaskContext.get()
+      val tally = new PartitionFold(runId, task.partitionId())
+      task.addTaskCompletionListener[Unit](_ => tally.row.foreach(rows.add))
+      open = tally
     }
+    open.add(d.failure, d.bytes, d.spans.size)
+    d
   }
 }

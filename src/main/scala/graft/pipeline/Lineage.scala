@@ -23,14 +23,28 @@ import scala.jdk.CollectionConverters._
   * cache_nats_obj.go:79-110, consulted via conditional GET).
   *
   * A commit evaluates the result once, in the output write, and caches
-  * nothing: each partition's metrics row is folded as its rows stream into
-  * that write, and the manifest is read back from the committed output. A
-  * committed run is never rewritten. Reports about a committed run (the run
-  * summary `RunPipeline` prints) read its metrics table through
-  * [[SnapshotStore.runMetrics]] instead of evaluating the result again.
+  * nothing: the [[MetricsFold]] the commit hands the extraction tallies
+  * each row where the kernel or the salted merge makes it, so each
+  * partition's metrics row reaches the driver with the output write. The
+  * manifest is read back from the committed output. A committed run is
+  * never rewritten. The commit returns the metrics rows it wrote, so the
+  * run summary `RunPipeline` prints needs no further job;
+  * [[SnapshotStore.runMetrics]] reads them back for later readers.
   */
 trait SnapshotStore {
-  def commitRun(runId: String, result: Dataset[ExtractedDoc]): Unit
+  /** Commits `result` as run `runId` and returns the metrics rows the
+    * commit wrote, sorted by partition id. Folds `result` with the same
+    * [[MetricsFold]] that [[commit]] hands an extraction.
+    */
+  def commitRun(runId: String, result: Dataset[ExtractedDoc]): Seq[PartitionMetrics] =
+    commit(runId)(fold => result.map(fold)(Encoders.product[ExtractedDoc]))
+  /** Commits the Dataset `build` makes as run `runId` and returns the
+    * metrics rows the commit wrote, sorted by partition id. `build` gets the
+    * commit's [[MetricsFold]] and must pass each row it yields through it
+    * once, in the stage that feeds the write, as
+    * [[ExtractPipeline.extract]]`(input, cfg, fold)` does.
+    */
+  def commit(runId: String)(build: MetricsFold => Dataset[ExtractedDoc]): Seq[PartitionMetrics]
   /** The doc ids of every committed run's manifest, for the resume
     * anti-join. An id may appear more than once.
     */
@@ -44,22 +58,19 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
 
   private def p(parts: String*): Path = Paths.get(root, parts: _*)
 
-  override def commitRun(runId: String, result: Dataset[ExtractedDoc]): Unit = {
+  override def commit(runId: String)(build: MetricsFold => Dataset[ExtractedDoc]): Seq[PartitionMetrics] = {
     // committedRuns skips dot-names, and a separator would nest the marker
     require(runId.nonEmpty && !runId.startsWith(".") && !runId.exists(c => c == '/' || c == '\\'),
       s"run id '$runId' must be non-empty, not start with '.', and hold no path separator")
     require(!Files.exists(p("_commits", runId)), s"run $runId is already committed")
-    val spark = result.sparkSession
-    val output = p("output", s"run=$runId").toString
-    // Exact: the pass-through runs in the output write's result stage, where
-    // Spark applies each partition's accumulator update once and drops the
-    // updates of failed attempts. (`Dataset.observe` would give one global
-    // aggregate; this table has a row per partition.)
     val rows = new CollectionAccumulator[PartitionMetrics]
+    val result = build(new MetricsFold(runId, rows))
+    val spark = result.sparkSession
     spark.sparkContext.register(rows, s"metrics run=$runId")
-    ExtractPipeline.foldMetrics(result, runId, rows)
-      .write.mode(SaveMode.Overwrite).parquet(output)
-    spark.createDataset(rows.value.asScala.toSeq.sortBy(_.partition_id))(Encoders.product[PartitionMetrics])
+    val output = p("output", s"run=$runId").toString
+    result.write.mode(SaveMode.Overwrite).parquet(output)
+    val metrics = rows.value.asScala.toSeq.sortBy(_.partition_id)
+    spark.createDataset(metrics)(Encoders.product[PartitionMetrics])
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(p("metrics", s"run=$runId").toString)
     spark.read.schema("doc_id STRING, failure STRING").parquet(output)
       .where(col("failure") === "").select("doc_id")
@@ -69,6 +80,7 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
     val tmp = p("_commits", s".$runId.tmp")
     Files.write(tmp, Array.emptyByteArray)
     Files.move(tmp, p("_commits", runId), StandardCopyOption.ATOMIC_MOVE)
+    metrics
   }
 
   override def committedRuns: Seq[String] = {
@@ -108,13 +120,13 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
 
 object Lineage {
   /** Full resumable run: read committed manifest → anti-join → extract →
-    * commit snapshot. What the run committed is read back through the
-    * store (`runMetrics`, or the `output/run=<runId>` table).
+    * commit snapshot. Returns the metrics rows the commit wrote (what
+    * [[SnapshotStore.runMetrics]] reads back); the committed docs are in
+    * the `output/run=<runId>` table.
     */
   def run(input: Dataset[Doc], store: SnapshotStore, runId: String,
-      cfg: ExtractPipeline.PipelineConfig = ExtractPipeline.PipelineConfig()): Unit = {
-    val spark = input.sparkSession
-    val todo = ExtractPipeline.resume(input, store.committedDocIds(spark))
-    store.commitRun(runId, ExtractPipeline.extract(todo, cfg))
+      cfg: ExtractPipeline.PipelineConfig = ExtractPipeline.PipelineConfig()): Seq[PartitionMetrics] = {
+    val todo = ExtractPipeline.resume(input, store.committedDocIds(input.sparkSession))
+    store.commit(runId)(fold => ExtractPipeline.extract(todo, cfg, fold))
   }
 }

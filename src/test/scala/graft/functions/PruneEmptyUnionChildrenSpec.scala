@@ -2,9 +2,12 @@ package graft.functions
 
 import graft.core.Extractor
 import graft.pipeline._
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{AppendColumnsWithObjectExec, DeserializeToObjectExec, MapElementsExec, MapGroupsExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.execution.{AppendColumnsWithObjectExec, DeserializeToObjectExec, MapElementsExec, MapGroupsExec, QueryExecution, SerializeFromObjectExec, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ExchangeQueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_COL}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
@@ -51,27 +54,68 @@ class PruneEmptyUnionChildrenSpec extends AnyFunSuite with AdaptiveSparkPlanHelp
   private def saltedChain(p: SparkPlan): Boolean =
     p.isInstanceOf[MapGroupsExec] || p.isInstanceOf[AppendColumnsWithObjectExec]
 
+  /** Whether `p` writes a run's `output/` table. */
+  private def writesOutput(p: SparkPlan): Boolean = has(p) {
+    case w: DataWritingCommandExec => w.cmd match {
+      case i: InsertIntoHadoopFsRelationCommand => i.outputPath.getParent.getName == "output"
+      case _ => false
+    }
+    case _ => false
+  }
+
   /** Commits `cfg`'s extraction of `n` synthetic docs under `root` as run
-    * `r1` and returns the final plan of the output write (the only one of
-    * the commit's writes that deserializes docs).
+    * `r1` through `Lineage.run`, reading them from parquet as a production
+    * run does, and returns the final plan of the output write.
     */
   private def commitAndPlan(s: SparkSession, root: String, n: Long,
       cfg: ExtractPipeline.PipelineConfig): SparkPlan = {
+    val input = Files.createTempDirectory("docs").resolve("t").toString
+    SynthCorpus.generate(s, n, seed = 42L, partitions = 8).write.parquet(input)
     val plans = new ConcurrentLinkedQueue[SparkPlan]
     val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe.executedPlan)
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (writesOutput(qe.executedPlan)) plans.add(qe.executedPlan)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     s.listenerManager.register(listener)
     try {
-      val corpus = SynthCorpus.generate(s, n, seed = 42L, partitions = 8)
-      new ParquetSnapshotStore(root).commitRun("r1", ExtractPipeline.extract(corpus, cfg))
-      // listeners hear of executions asynchronously; the commit runs three
-      eventually(timeout(30.seconds)) { assert(plans.size >= 3) }
+      val corpus = s.read.parquet(input).as[Doc](Encoders.product[Doc])
+      Lineage.run(corpus, new ParquetSnapshotStore(root), "r1", cfg)
+      // listeners hear of executions asynchronously
+      eventually(timeout(30.seconds)) { assert(!plans.isEmpty) }
     } finally s.listenerManager.unregister(listener)
-    val output = plans.asScala.filter(has(_)(_.isInstanceOf[DeserializeToObjectExec])).toSeq
-    assert(output.length == 1, "expected one output write")
-    output.head
+    assert(plans.size == 1, "expected one output write")
+    plans.peek()
+  }
+
+  /** The operators of the output write's result stage: those above its
+    * union (none when the union was pruned) and those of each branch.
+    */
+  private def resultStage(plan: SparkPlan): (Seq[SparkPlan], Seq[Seq[SparkPlan]]) = {
+    def ops(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: ExchangeQueryStageExec | _: Exchange => Nil
+      case _ => p +: allChildren(p).flatMap(ops)
+    }
+    def toUnion(p: SparkPlan): Option[(Seq[SparkPlan], UnionExec)] = p match {
+      case u: UnionExec => Some((Nil, u))
+      case _: ExchangeQueryStageExec | _: Exchange => None
+      case _ => allChildren(p).iterator.flatMap(toUnion).nextOption().map { case (above, u) => (p +: above, u) }
+    }
+    toUnion(plan) match {
+      case Some((above, u)) => (above, u.children.map(ops))
+      case None => (Nil, Seq(ops(plan)))
+    }
+  }
+
+  /** Each output row is serialized once, by its branch: no object
+    * conversion above the union, and one serializer in each branch.
+    */
+  private def assertOneSerializerPerBranch(plan: SparkPlan): Unit = {
+    val (above, branches) = resultStage(plan)
+    assert(!above.exists(o => o.isInstanceOf[DeserializeToObjectExec] || o.isInstanceOf[SerializeFromObjectExec]),
+      s"object conversion above the union: ${above.map(_.nodeName)}")
+    assert(branches.map(_.count(_.isInstanceOf[SerializeFromObjectExec])) == branches.map(_ => 1),
+      s"serializers per branch: ${branches.map(_.map(_.nodeName))}")
   }
 
   private def tables(root: String) = {
@@ -84,13 +128,17 @@ class PruneEmptyUnionChildrenSpec extends AnyFunSuite with AdaptiveSparkPlanHelp
   }
 
   test("no mega-doc: the commit runs without the salted chain and commits the same tables") {
-    val cfg = ExtractPipeline.PipelineConfig(numPartitions = 4)
+    val cfg = ExtractPipeline.PipelineConfig()
     val withRule = Files.createTempDirectory("lineage").toString
     val without = Files.createTempDirectory("lineage").toString
     withExtensions { s =>
-      assert(!has(commitAndPlan(s, withRule, 60L, cfg))(saltedChain), "salted chain still in the plan")
+      val plan = commitAndPlan(s, withRule, 60L, cfg)
+      assert(!has(plan)(saltedChain), "salted chain still in the plan")
+      assertOneSerializerPerBranch(plan)
     }
-    assert(has(commitAndPlan(plain, without, 60L, cfg))(saltedChain), "no salted chain without the rule")
+    val unpruned = commitAndPlan(plain, without, 60L, cfg)
+    assert(has(unpruned)(saltedChain), "no salted chain without the rule")
+    assertOneSerializerPerBranch(unpruned)
     val (output, metrics, manifest) = tables(withRule)
     assert(output.length == 60)
     assert(metrics.map(_._3).sum == 60)
@@ -101,8 +149,15 @@ class PruneEmptyUnionChildrenSpec extends AnyFunSuite with AdaptiveSparkPlanHelp
   test("mega-docs: the salted chain stays and the output equals the per-doc reference") {
     val root = Files.createTempDirectory("lineage").toString
     withExtensions { s =>
-      val cfg = ExtractPipeline.PipelineConfig(numPartitions = 4, megaDocBytes = 2048)
-      assert(has(commitAndPlan(s, root, 40L, cfg))(saltedChain), "salted chain pruned")
+      val cfg = ExtractPipeline.PipelineConfig(megaDocBytes = 2048)
+      val plan = commitAndPlan(s, root, 40L, cfg)
+      assert(has(plan)(saltedChain), "salted chain pruned")
+      assertOneSerializerPerBranch(plan)
+      // the spread is sized by AQE: a repartition by columns, read coalesced
+      val spread = collect(plan) { case q: ShuffleQueryStageExec if q.shuffle.shuffleOrigin == REPARTITION_BY_COL => q }
+      assert(spread.length == 1, "no salted spread by columns")
+      assert(collect(plan) { case r: AQEShuffleReadExec => r.child }.contains(spread.head),
+        "salted spread not read through AQE")
     }
     val (output, _, _) = tables(root)
     assert(output.map(_.doc_id) == (0L until 40L).map(i => s"doc$i").sorted)

@@ -66,10 +66,10 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val n = 200L
     val corpus = SynthCorpus.generate(spark, n, seed = 42L, partitions = 4)
     // the default threshold salts nothing; 16 KiB salts the larger docs
-    val salting = ExtractPipeline.PipelineConfig(numPartitions = 4, megaDocBytes = 16 * 1024)
+    val salting = ExtractPipeline.PipelineConfig(megaDocBytes = 16 * 1024)
     assert((0L until n).exists(id => ExtractPipeline.splitChunks(SynthCorpus.mkDoc(id, 42L), salting).length > 1),
       "no doc splits at 16 KiB")
-    for (cfg <- Seq(ExtractPipeline.PipelineConfig(numPartitions = 4), salting)) {
+    for (cfg <- Seq(ExtractPipeline.PipelineConfig(), salting)) {
       val result = ExtractPipeline.extract(corpus, cfg).collect()
       assert(result.length == n)
       // distributed result must equal per-doc local extraction exactly
@@ -124,13 +124,13 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val corpus = SynthCorpus.generate(spark, 100L, seed = 42L, partitions = 4)
     val firstHalf = corpus.filter(d => d.doc_id.drop(3).toLong < 50)
     Lineage.run(firstHalf, store, runId = "r1",
-      ExtractPipeline.PipelineConfig(numPartitions = 4))
+      ExtractPipeline.PipelineConfig())
     assert(store.committedRuns == Seq("r1"))
     checkRunMetrics("r1")
     val committed = store.committedDocIds(spark).collect().toSet
     assert(committed.size == 48) // docs 18 and 38 fail, so 48 of the first 50 commit
     Lineage.run(corpus, store, runId = "r2",
-      ExtractPipeline.PipelineConfig(numPartitions = 4))
+      ExtractPipeline.PipelineConfig())
     checkRunMetrics("r2")
     val secondIds = spark.read.parquet(s"$tmp/output/run=r2").select("doc_id").as[String].collect().toSet
     // r2 re-extracts only uncommitted docs (failures retry + the second half)
@@ -143,7 +143,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
   test("metrics rows aggregate docs/bytes/spans/failures") {
     import spark.implicits._
     val corpus = SynthCorpus.generate(spark, 100L, seed = 42L, partitions = 4)
-    val result = ExtractPipeline.extract(corpus, ExtractPipeline.PipelineConfig(numPartitions = 4))
+    val result = ExtractPipeline.extract(corpus, ExtractPipeline.PipelineConfig())
     val m = ExtractPipeline.metrics(result, "t1").collect()
     assert(m.map(_.docs).sum == 100)
     assert(m.map(_.spans).sum > 0)
@@ -157,10 +157,11 @@ class ExtractPipelineSpec extends AnyFunSuite {
   // the same partitions.
   private val inputPartitions = 48
 
+  private val mixedCfg = ExtractPipeline.PipelineConfig(megaDocBytes = 2048)
+  private def mixedCorpus = SynthCorpus.generate(spark, 40L, seed = 42L, partitions = inputPartitions)
+
   private def withMixedPartitions(body: org.apache.spark.sql.Dataset[ExtractedDoc] => Unit): Unit = {
-    val cfg = ExtractPipeline.PipelineConfig(numPartitions = 4, megaDocBytes = 2048)
-    val corpus = SynthCorpus.generate(spark, 40L, seed = 42L, partitions = inputPartitions)
-    val result = ExtractPipeline.extract(corpus, cfg).persist()
+    val result = ExtractPipeline.extract(mixedCorpus, mixedCfg).persist()
     try body(result) finally result.unpersist()
   }
 
@@ -217,10 +218,28 @@ class ExtractPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("Lineage.run folds the metrics of the plan it commits and returns the rows it wrote") {
+    val tmp = java.nio.file.Files.createTempDirectory("lineage").toString
+    val store = new ParquetSnapshotStore(tmp)
+    // the plan Lineage.run commits, evaluated without the commit's fold
+    val plan = ExtractPipeline.extract(ExtractPipeline.resume(mixedCorpus, store.committedDocIds(spark)), mixedCfg)
+    val reference = ExtractPipeline.metrics(plan, "f1").collect().sortBy(_.partition_id).toSeq
+    val returned = Lineage.run(mixedCorpus, store, "f1", mixedCfg)
+    val committed = store.runMetrics(spark, "f1").collect().sortBy(_.partition_id).toSeq
+    assert(returned == committed)
+    assert(committed == reference)
+    // the cases the comparison must cover all occur
+    assert(reference.exists(_.partition_id >= inputPartitions), "no salted partition")
+    assert(reference.exists(m => m.partition_id < inputPartitions && m.failures.isEmpty), "no all-ok partition")
+    assert(reference.exists(_.failures.nonEmpty), "no partition with failures")
+    assert(reference.length < plan.rdd.getNumPartitions, "no empty partition")
+    assert(reference.map(_.docs).sum == 40)
+  }
+
   test("empty commit: rerunning a fully committed input commits empty tables") {
     val tmp = java.nio.file.Files.createTempDirectory("lineage").toString
     val store = new ParquetSnapshotStore(tmp)
-    val cfg = ExtractPipeline.PipelineConfig(numPartitions = 4)
+    val cfg = ExtractPipeline.PipelineConfig()
     // without the failing docs (doc_id % 20 == 18) the first run commits every doc
     val clean = SynthCorpus.generate(spark, 40L, seed = 42L, partitions = 4)
       .filter(d => d.doc_id.drop(3).toLong % 20 != 18)
@@ -237,7 +256,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("lineage").toString
     val store = new ParquetSnapshotStore(tmp)
-    val cfg = ExtractPipeline.PipelineConfig(numPartitions = 2)
+    val cfg = ExtractPipeline.PipelineConfig()
     val corpus = SynthCorpus.generate(spark, 20L, seed = 42L, partitions = 2)
     def output(runId: String) = spark.read.parquet(s"$tmp/output/run=$runId").as[ExtractedDoc]
       .collect().map(d => (d.doc_id, d.failure, d.bytes, d.spans.size)).sortBy(_._1).toSeq
@@ -258,7 +277,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("lineage")
     val store = new ParquetSnapshotStore(tmp.toString)
     val result = ExtractPipeline.extract(SynthCorpus.generate(spark, 4L, seed = 42L, partitions = 1),
-      ExtractPipeline.PipelineConfig(numPartitions = 1))
+      ExtractPipeline.PipelineConfig())
     for (runId <- Seq(".r1", "a/b", ""))
       intercept[IllegalArgumentException](store.commitRun(runId, result))
     assert(!java.nio.file.Files.exists(tmp.resolve("output")))
