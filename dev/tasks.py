@@ -4,12 +4,15 @@
     python3 dev/tasks.py <event-log dir>
 
 Reads uncompressed event logs (written with `spark.eventLog.enabled=true`,
-`spark.eventLog.dir=<dir>` and `spark.eventLog.compress=false`), one file
-per application, in the order the applications started. For each it prints
-the SQL executions, jobs, stages run and skipped, and tasks, then one line
-per stage attempt run: its task count, and the summed and the longest task
-run time (executor run time) in seconds. A stage is skipped when a job
-lists it but it never ran (its shuffle output was already there).
+`spark.eventLog.dir=<dir>` and `spark.eventLog.compress=false`) in the
+order the applications started. An application's log is one file, or,
+when Spark rolls its logs (the default since Spark 4.0), one
+`eventlog_v2_<app id>` directory of `events_<n>_<app id>` files. For each
+application it prints the SQL executions, jobs, stages run and skipped,
+and tasks, then one line per stage attempt run: its task count, and the
+summed and the longest task run time (executor run time) in seconds. A
+stage is skipped when a job lists it but it never ran (its shuffle output
+was already there).
 """
 import argparse
 import json
@@ -17,15 +20,24 @@ import sys
 from pathlib import Path
 
 
+def log_files(path):
+    """The files of one application's log, in the order Spark wrote them."""
+    if path.is_file():
+        return [path]
+    parts = [p for p in path.iterdir() if p.name.startswith("events_")]
+    return sorted(parts, key=lambda p: int(p.name.split("_")[1]))
+
+
 def events(path):
-    with open(path, encoding="utf-8", errors="replace") as f:
-        for line in f:
-            line = line.strip()
-            if line:
-                try:
-                    yield json.loads(line)
-                except json.JSONDecodeError:
-                    pass  # a log cut short by a crash ends in a partial line
+    for part in log_files(path):
+        with open(part, encoding="utf-8", errors="replace") as f:
+            for line in f:
+                line = line.strip()
+                if line:
+                    try:
+                        yield json.loads(line)
+                    except json.JSONDecodeError:
+                        pass  # a log cut short by a crash ends in a partial line
 
 
 def application(path):
@@ -44,7 +56,8 @@ def application(path):
         elif kind == "SparkListenerStageCompleted":
             info = e["Stage Info"]
             key = (info["Stage ID"], info.get("Stage Attempt ID", 0))
-            app["stages"].setdefault(key, {"name": info.get("Stage Name", ""), "tasks": 0, "run_ms": 0, "max_ms": 0})
+            stage = app["stages"].setdefault(key, {"tasks": 0, "run_ms": 0, "max_ms": 0})
+            stage["name"] = info.get("Stage Name", "")
         elif kind == "SparkListenerTaskEnd":
             key = (e["Stage ID"], e.get("Stage Attempt ID", 0))
             stage = app["stages"].setdefault(key, {"name": "", "tasks": 0, "run_ms": 0, "max_ms": 0})
@@ -70,10 +83,11 @@ def main():
     parser = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     parser.add_argument("dir", type=Path, help="event-log directory")
     args = parser.parse_args()
-    logs = [p for p in args.dir.iterdir() if p.is_file() and not p.name.startswith(".")]
+    logs = [p for p in args.dir.iterdir()
+            if not p.name.startswith(".") and (p.is_file() or p.name.startswith("eventlog_v2_"))]
     if not logs:
         sys.exit(f"tasks.py: no event logs in {args.dir}")
-    if any(p.suffix in (".lz4", ".lzf", ".snappy", ".zstd") for p in logs):
+    if any(f.suffix in (".lz4", ".lzf", ".snappy", ".zstd") for p in logs for f in log_files(p)):
         sys.exit("tasks.py: compressed event logs; write them with spark.eventLog.compress=false")
     for app in sorted(map(application, logs), key=lambda a: a["start"]):
         report(app)

@@ -123,14 +123,12 @@ class ExtractPipelineSpec extends AnyFunSuite {
     }
     val corpus = SynthCorpus.generate(spark, 100L, seed = 42L, partitions = 4)
     val firstHalf = corpus.filter(d => d.doc_id.drop(3).toLong < 50)
-    Lineage.run(firstHalf, store, runId = "r1",
-      ExtractPipeline.PipelineConfig())
+    Lineage.run(firstHalf, store, runId = "r1")
     assert(store.committedRuns == Seq("r1"))
     checkRunMetrics("r1")
     val committed = store.committedDocIds(spark).collect().toSet
     assert(committed.size == 48) // docs 18 and 38 fail, so 48 of the first 50 commit
-    Lineage.run(corpus, store, runId = "r2",
-      ExtractPipeline.PipelineConfig())
+    Lineage.run(corpus, store, runId = "r2")
     checkRunMetrics("r2")
     val secondIds = spark.read.parquet(s"$tmp/output/run=r2").select("doc_id").as[String].collect().toSet
     // r2 re-extracts only uncommitted docs (failures retry + the second half)
@@ -143,7 +141,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
   test("metrics rows aggregate docs/bytes/spans/failures") {
     import spark.implicits._
     val corpus = SynthCorpus.generate(spark, 100L, seed = 42L, partitions = 4)
-    val result = ExtractPipeline.extract(corpus, ExtractPipeline.PipelineConfig())
+    val result = ExtractPipeline.extract(corpus)
     val m = ExtractPipeline.metrics(result, "t1").collect()
     assert(m.map(_.docs).sum == 100)
     assert(m.map(_.spans).sum > 0)
@@ -239,13 +237,12 @@ class ExtractPipelineSpec extends AnyFunSuite {
   test("empty commit: rerunning a fully committed input commits empty tables") {
     val tmp = java.nio.file.Files.createTempDirectory("lineage").toString
     val store = new ParquetSnapshotStore(tmp)
-    val cfg = ExtractPipeline.PipelineConfig()
     // without the failing docs (doc_id % 20 == 18) the first run commits every doc
     val clean = SynthCorpus.generate(spark, 40L, seed = 42L, partitions = 4)
       .filter(d => d.doc_id.drop(3).toLong % 20 != 18)
-    Lineage.run(clean, store, "r1", cfg)
+    Lineage.run(clean, store, "r1")
     assert(store.committedDocIds(spark).count() == 38)
-    Lineage.run(clean, store, "r2", cfg)
+    Lineage.run(clean, store, "r2")
     assert(store.committedRuns == Seq("r1", "r2"))
     assert(spark.read.parquet(s"$tmp/output/run=r2").count() == 0)
     assert(spark.read.parquet(s"$tmp/manifest/run=r2").count() == 0)
@@ -256,19 +253,18 @@ class ExtractPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("lineage").toString
     val store = new ParquetSnapshotStore(tmp)
-    val cfg = ExtractPipeline.PipelineConfig()
     val corpus = SynthCorpus.generate(spark, 20L, seed = 42L, partitions = 2)
     def output(runId: String) = spark.read.parquet(s"$tmp/output/run=$runId").as[ExtractedDoc]
       .collect().map(d => (d.doc_id, d.failure, d.bytes, d.spans.size)).sortBy(_._1).toSeq
-    store.commitRun("r1", ExtractPipeline.extract(corpus.filter(d => d.doc_id.drop(3).toLong < 10), cfg))
+    store.commitRun("r1", ExtractPipeline.extract(corpus.filter(d => d.doc_id.drop(3).toLong < 10)))
     val before = output("r1")
     assert(before.length == 10)
-    intercept[IllegalArgumentException](store.commitRun("r1", ExtractPipeline.extract(corpus, cfg)))
+    intercept[IllegalArgumentException](store.commitRun("r1", ExtractPipeline.extract(corpus)))
     assert(output("r1") == before)
     assert(store.committedRuns == Seq("r1"))
     // a crashed run left a partial output and no marker: committing it again works
     spark.range(3).write.parquet(s"$tmp/output/run=r2")
-    store.commitRun("r2", ExtractPipeline.extract(corpus, cfg))
+    store.commitRun("r2", ExtractPipeline.extract(corpus))
     assert(output("r2").length == 20)
     assert(store.committedRuns == Seq("r1", "r2"))
   }
@@ -276,8 +272,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
   test("commitRun refuses a run id resume could not see or the marker could not name") {
     val tmp = java.nio.file.Files.createTempDirectory("lineage")
     val store = new ParquetSnapshotStore(tmp.toString)
-    val result = ExtractPipeline.extract(SynthCorpus.generate(spark, 4L, seed = 42L, partitions = 1),
-      ExtractPipeline.PipelineConfig())
+    val result = ExtractPipeline.extract(SynthCorpus.generate(spark, 4L, seed = 42L, partitions = 1))
     for (runId <- Seq(".r1", "a/b", ""))
       intercept[IllegalArgumentException](store.commitRun(runId, result))
     assert(!java.nio.file.Files.exists(tmp.resolve("output")))
