@@ -10,7 +10,10 @@ import org.apache.spark.sql.{Encoders, SparkSession}
   *
   * Reads the interleaved-span table (BASELINE.json input_hint schema),
   * resumes from the lineage root's last committed snapshot, extracts, and
-  * commits output/metrics/manifest atomically. When the input is
+  * commits output/metrics/manifest atomically ([[Lineage.run]]: one job
+  * that scans the input once, plus a salted job only when some doc is
+  * mega). The session is a plain one: nothing on this path resolves a SQL
+  * function by name, so it installs no extension. When the input is
   * "synth:<n>" a deterministic corpus of n docs is generated instead (no
   * external data). `numPartitions` (default 32) sets
   * `spark.sql.shuffle.partitions`: the starting width of the salted
@@ -31,7 +34,6 @@ object RunPipeline {
       .config("spark.sql.shuffle.partitions", numPartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
     // spark-submit supplies the master on a cluster; fall back for local runs
     val spark = (if (sys.props.contains("spark.master")) builder
                  else builder.master("local[*]")).getOrCreate()

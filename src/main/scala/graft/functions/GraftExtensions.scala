@@ -6,9 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions installer — enables
   * `spark.sql.extensions=graft.functions.GraftExtensions` on any cluster,
-  * injecting the extraction scalar functions into every session
-  * (SURVEY §4: injectFunction path) and the AQE runtime rule
-  * [[PruneEmptyUnionChildren]].
+  * injecting the extraction and vector scalar functions into every session
+  * (SURVEY §4: injectFunction path).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -33,7 +32,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     })
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectRuntimeOptimizerRule(_ => PruneEmptyUnionChildren)
     ext.injectFunction(fn("dehyphenate",
       classOf[SpanExpressions.Dehyphenate].getName, 2)(
       exprs => SpanExpressions.Dehyphenate(exprs.head, exprs(1))))

@@ -2,9 +2,9 @@ package graft.pipeline
 
 import graft.core.{Dehyphenator, Extractor}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.CollectionAccumulator
+import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
 import scala.collection.mutable
 
 /** The extraction stage (SURVEY §3.1 Spark restatement):
@@ -23,18 +23,18 @@ import scala.collection.mutable
   * into [[graft.core.Extractor.extract]] and its result spans into the
   * output row without a copy.
   *
-  * When no doc is mega, the salted branch costs one routing scan: in a
-  * session with `spark.sql.extensions=graft.functions.GraftExtensions`
-  * (`RunPipeline`'s), the AQE rule
-  * [[graft.functions.PruneEmptyUnionChildren]] sees the spread shuffle come
-  * back empty and drops the chunk kernel, the regroup and the merge from
-  * the plan. Sessions without the extension run the whole branch.
+  * [[extract]] is the stage as one Dataset, the union of both branches,
+  * each over its own scan of the input. A commit ([[Lineage.run]]) runs
+  * the branches as up to two jobs instead: [[routed]] scans the input once,
+  * extracts the small docs and only collects the mega-docs' ids; when it
+  * collected any, [[salted]] reads just those docs again and appends their
+  * rows. A run with no mega-doc therefore scans its input once and never
+  * plans the salted branch.
   *
-  * A commit ([[ParquetSnapshotStore.commit]]) writes the result in one
-  * pass. It hands [[extract]] a [[MetricsFold]], which tallies each output
-  * row where the row is made (the unsalted kernel and the salted merge), so
-  * the output write serializes each row once and the run's per-partition
-  * metrics rows come back to the driver with the write.
+  * Both jobs pass each output row through the commit's [[MetricsFold]]
+  * where the row is made (the unsalted kernel and the salted merge), so the
+  * output write serializes each row once and the run's per-partition
+  * metrics rows come back to the driver with the writes.
   *
   * The whole per-document kernel ([[graft.core.Extractor]]) runs inside a
   * single typed transform — spans never explode into per-span rows, so the
@@ -159,75 +159,82 @@ object ExtractPipeline {
     * batches, so the mega/small routing decision never deserializes a row.
     * Codegen'd native expression: the interpreted `aggregate(..., length)`
     * HOF it replaces dominated the whole extraction stage (it runs on every
-    * row of BOTH branch scans). UTF-8 byte count vs [[docBytes]]'s UTF-16
+    * input row: once in a commit's routed scan, in both branch scans of
+    * [[extract]]). UTF-8 byte count vs [[docBytes]]'s UTF-16
     * char count only shifts WHICH side of the salting threshold a borderline
     * doc lands on — both paths produce identical merged output (salting
     * byte-identity property test), so the routing basis is pure policy.
     */
   private def docBytesCol = graft.functions.SpanExpressions.span_byte_cost(col("spans"))
 
-  def extract(input: Dataset[Doc], cfg: PipelineConfig = PipelineConfig()): Dataset[ExtractedDoc] =
-    extract(input, cfg, identity[ExtractedDoc])
-
-  /** [[extract]], passing each output row through `fold` where the row is
-    * made: in the unsalted kernel's `mapPartitions` and in the salted
-    * `mapGroups` merge. A commit passes its [[MetricsFold]] here.
+  /** Whether a doc takes the salted branch, as a column over the input.
+    * Single-span docs can't split regardless of size (binary payloads parse
+    * atomically), so they stay on the fast path too.
     */
-  def extract(input: Dataset[Doc], cfg: PipelineConfig,
-      fold: ExtractedDoc => ExtractedDoc): Dataset[ExtractedDoc] = {
+  private[pipeline] def isMega(cfg: PipelineConfig): Column =
+    docBytesCol > cfg.megaDocBytes && size(col("spans")) > 1
+
+  /** The whole kernel over one unsalted doc. The kernel sorts the spans and
+    * numbers its output 0..n-1, and a failed doc comes back without spans or
+    * metadata, so its result is the output row as is.
+    */
+  private def extractDoc(docId: String, spans: Seq[Span], cfg: PipelineConfig): ExtractedDoc = {
+    val r = Extractor.extract(docId, spans, cfg.extractor)
+    ExtractedDoc(docId, r.spans, r.metadata, r.failure, docBytes(spans))
+  }
+
+  /** The whole stage as one Dataset: the union of the unsalted branch, ONE
+    * fused stage (deserialize → whole kernel → serialize) straight over the
+    * scan placement, and [[salted]]. Each branch scans the input with its
+    * side of [[isMega]].
+    */
+  def extract(input: Dataset[Doc], cfg: PipelineConfig = PipelineConfig()): Dataset[ExtractedDoc] = {
     val spark = input.sparkSession
     import spark.implicits._
+    val single = input.where(!isMega(cfg)).mapPartitions(_.map(d => extractDoc(d.doc_id, d.spans, cfg)))
+    single.union(salted(input.where(isMega(cfg)), cfg, identity))
+  }
 
-    // Routing happens on a COLUMN expression before any deserialization, and
-    // before the expensive kernel — each branch extracts only its own rows.
-    // Single-span docs can't split regardless of size (binary payloads parse
-    // atomically), so they stay on the fast path too.
-    //
-    // ADR — two branch scans, deliberately: the mega/single split reads the
-    // input twice (the routing predicate runs on columnar batches in both).
-    // The alternatives are worse at this corpus shape: caching the
-    // scan pins the whole corpus in executor memory; salting EVERYTHING
-    // funnels 100% of bytes through one shuffle to save a second read of
-    // the (usually page-cached / cheap columnar) scan, and the unsalted
-    // majority would lose its shuffle-free fused stage. On `extract_mixed`
-    // (perfbench `--trace 1`, seed 1, 4-core shared VM) the second scan's
-    // stage took 0.32 s of a 2.73 s pass (`stage.salt_spread.run_s` of
-    // `run.pass_s`). BASELINE.md rounds 4-5 measured salting everything
-    // 11% faster with an in-JVM shuffle but 18% slower with one executor
-    // JVM, and it shuffles every doc twice, which the runtime pruning below
-    // cannot drop. If the mega fraction is known to be tiny at the source,
-    // partition the table by a size class at write time and this split
-    // becomes partition pruning instead of a second scan. With no mega-doc,
-    // that second (routing) scan is all the salted branch costs in a
-    // GraftExtensions session (see the header); the branch must stay
-    // row-level (map, not mapPartitions) for the extension's AQE rule to
-    // drop it. For the same reason the fold rides inside the merge's
-    // `mapGroups` instead of adding a `mapPartitions` to the branch.
-    val isMega = docBytesCol > cfg.megaDocBytes && size(col("spans")) > 1
+  /** The first job of a commit: ONE scan of `todo` that routes as it goes.
+    * Each row carries its [[isMega]] flag, and a mega-doc's spans are
+    * projected as null, so it is never deserialized. Each small doc is
+    * extracted and passed through `fold`; each mega-doc only adds its id to
+    * `megaIds`, and each task adds 1 to `tasks`. Both are exact once the
+    * write whose result stage runs this kernel has finished.
+    */
+  private[pipeline] def routed(todo: Dataset[Doc], cfg: PipelineConfig, fold: ExtractedDoc => ExtractedDoc,
+      megaIds: CollectionAccumulator[String], tasks: LongAccumulator): Dataset[ExtractedDoc] = {
+    val spark = todo.sparkSession
+    import spark.implicits._
+    val mega = isMega(cfg)
+    todo.select(col("doc_id"), when(!mega, col("spans")), mega)
+      .as[(String, Seq[Span], Boolean)]
+      .mapPartitions { rows =>
+        tasks.add(1)
+        rows.flatMap {
+          case (id, _, true) => megaIds.add(id); None
+          case (id, spans, false) => Some(fold(extractDoc(id, spans, cfg)))
+        }
+      }
+  }
 
-    // 1a. unsalted majority: ONE fused stage (deserialize → whole kernel →
-    //     serialize) straight over the scan placement. The kernel sorts the
-    //     spans and numbers its output 0..n-1, and a failed doc comes back
-    //     without spans or metadata, so its result is the output row as is.
-    val single = input.where(!isMega).mapPartitions(it => it.map { d =>
-      val r = Extractor.extract(d.doc_id, d.spans, cfg.extractor)
-      fold(ExtractedDoc(d.doc_id, r.spans, r.metadata, r.failure, docBytes(d.spans)))
-    })
-
-    // 1b. salted minority: split into contiguous span chunks, spread by
-    //     (doc_id, salt) so one mega-doc fans across tasks, extract, then
-    //     regroup + exact merge (cross-chunk dehyphenator replay). The
-    //     spread names no partition count: it starts at the session's
-    //     `spark.sql.shuffle.partitions`, and AQE coalesces it to the bytes
-    //     and cores at hand (a `repartition(n, ...)` it would leave at n).
-    val salted = input.where(isMega)
-      .flatMap(d => splitChunks(d, cfg))
+  /** The salted branch over `mega`, docs routed to it: split into
+    * contiguous span chunks, spread by (doc_id, salt) so one mega-doc fans
+    * across tasks, extract, then regroup + exact merge (cross-chunk
+    * dehyphenator replay), passing each merged row through `fold`. The
+    * spread names no partition count: it starts at the session's
+    * `spark.sql.shuffle.partitions`, and AQE coalesces it to the bytes and
+    * cores at hand (a `repartition(n, ...)` it would leave at n).
+    */
+  private[pipeline] def salted(mega: Dataset[Doc], cfg: PipelineConfig,
+      fold: ExtractedDoc => ExtractedDoc): Dataset[ExtractedDoc] = {
+    val spark = mega.sparkSession
+    import spark.implicits._
+    mega.flatMap(d => splitChunks(d, cfg))
       .repartition(col("doc_id"), col("salt"))
       .map(c => extractChunk(c, cfg))
       .groupByKey(_.doc_id)
       .mapGroups((id, it) => fold(mergeChunks(id, it.toSeq)))
-
-    single.union(salted)
   }
 
   /** Per-partition metrics (lineage rows): one narrow `mapPartitions` over
@@ -267,8 +274,9 @@ private[pipeline] final class PartitionFold(runId: String, partitionId: Int) {
 }
 
 /** Tallies the rows passed through it into one [[PartitionMetrics]] row per
-  * task, keyed by the task's partition id, and adds that row to `rows` when
-  * the task completes. A task that passes no row adds none.
+  * task, keyed by the task's partition id (moved up by [[after]]), and adds
+  * that row to `rows` when the task completes. A task that passes no row
+  * adds none.
   *
   * Each task deserializes its own copy of the fold, so `open` is task-local;
   * it is made on the task's first row. Exact when the fold runs in the
@@ -278,18 +286,25 @@ private[pipeline] final class PartitionFold(runId: String, partitionId: Int) {
   * attempts. (`Dataset.observe` would give one global aggregate; the
   * metrics table has a row per partition.)
   */
-final class MetricsFold private[pipeline] (runId: String, rows: CollectionAccumulator[PartitionMetrics])
-    extends (ExtractedDoc => ExtractedDoc) with Serializable {
+final class MetricsFold private[pipeline] (runId: String, rows: CollectionAccumulator[PartitionMetrics],
+    firstPartition: Int = 0) extends (ExtractedDoc => ExtractedDoc) with Serializable {
   @transient private var open: PartitionFold = _
 
   def apply(d: ExtractedDoc): ExtractedDoc = {
     if (open == null) {
       val task = TaskContext.get()
-      val tally = new PartitionFold(runId, task.partitionId())
+      val tally = new PartitionFold(runId, firstPartition + task.partitionId())
       task.addTaskCompletionListener[Unit](_ => tally.row.foreach(rows.add))
       open = tally
     }
     open.add(d.failure, d.bytes, d.spans.size)
     d
   }
+
+  /** This fold with each task's partition id moved up by `n`: for a second
+    * write into the same run, after a first write of `n` partitions, so that
+    * the two writes' rows keep distinct partition ids, numbered as in the
+    * union of the two.
+    */
+  def after(n: Int): MetricsFold = new MetricsFold(runId, rows, firstPartition + n)
 }

@@ -7,9 +7,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Lineage / manifest table with snapshot-commit semantics over parquet
-  * (SURVEY §7: no Iceberg jar in this sandbox; the write API is a small
-  * trait so a real Iceberg catalog slots in unchanged via
-  * spark.sql.catalog.*).
+  * (SURVEY §7: no Iceberg jar in this sandbox).
   *
   * Layout under `root`:
   *   output/run=<runId>/        extracted docs parquet (written first)
@@ -22,53 +20,48 @@ import scala.jdk.CollectionConverters._
   * committed snapshot (reference analog: the NATS object-store cache,
   * cache_nats_obj.go:79-110, consulted via conditional GET).
   *
-  * A commit evaluates the result once, in the output write, and caches
-  * nothing: the [[MetricsFold]] the commit hands the extraction tallies
-  * each row where the kernel or the salted merge makes it, so each
-  * partition's metrics row reaches the driver with the output write. The
-  * manifest is read back from the committed output. A committed run is
-  * never rewritten. The commit returns the metrics rows it wrote, so the
-  * run summary `RunPipeline` prints needs no further job;
-  * [[SnapshotStore.runMetrics]] reads them back for later readers.
+  * A commit has one body, which writes the output in one or more appends
+  * (a [[Lineage.run]] makes one, or two when some doc is mega) and caches
+  * nothing: the [[MetricsFold]] the commit hands the body tallies each row
+  * where the kernel or the salted merge makes it, so each partition's
+  * metrics row reaches the driver with the output writes. Then come the
+  * metrics, the manifest (read back from the committed output) and the
+  * marker. A committed run is never rewritten. The commit returns the
+  * metrics rows it wrote, so the run summary `RunPipeline` prints needs no
+  * further job; [[ParquetSnapshotStore.runMetrics]] reads them back for
+  * later readers.
   */
-trait SnapshotStore {
-  /** Commits `result` as run `runId` and returns the metrics rows the
-    * commit wrote, sorted by partition id. Folds `result` with the same
-    * [[MetricsFold]] that [[commit]] hands an extraction.
-    */
-  def commitRun(runId: String, result: Dataset[ExtractedDoc]): Seq[PartitionMetrics] =
-    commit(runId)(fold => result.map(fold)(Encoders.product[ExtractedDoc]))
-  /** Commits the Dataset `build` makes as run `runId` and returns the
-    * metrics rows the commit wrote, sorted by partition id. `build` gets the
-    * commit's [[MetricsFold]] and must pass each row it yields through it
-    * once, in the stage that feeds the write, as
-    * [[ExtractPipeline.extract]]`(input, cfg, fold)` does.
-    */
-  def commit(runId: String)(build: MetricsFold => Dataset[ExtractedDoc]): Seq[PartitionMetrics]
-  /** The doc ids of every committed run's manifest, for the resume
-    * anti-join. An id may appear more than once.
-    */
-  def committedDocIds(spark: SparkSession): Dataset[String]
-  def committedRuns: Seq[String]
-  /** The per-partition metrics a committed run wrote. */
-  def runMetrics(spark: SparkSession, runId: String): Dataset[PartitionMetrics]
-}
-
-final class ParquetSnapshotStore(root: String) extends SnapshotStore {
+final class ParquetSnapshotStore(root: String) {
 
   private def p(parts: String*): Path = Paths.get(root, parts: _*)
 
-  override def commit(runId: String)(build: MetricsFold => Dataset[ExtractedDoc]): Seq[PartitionMetrics] = {
+  /** Commits `result` as run `runId` and returns the metrics rows the
+    * commit wrote, sorted by partition id. Folds `result` with the same
+    * [[MetricsFold]] that [[commit]] hands a body.
+    */
+  def commitRun(runId: String, result: Dataset[ExtractedDoc]): Seq[PartitionMetrics] =
+    commit(result.sparkSession, runId)((fold, append) => append(result.map(fold)(Encoders.product[ExtractedDoc])))
+
+  /** Commits what `body` writes as run `runId` and returns the metrics rows
+    * the commit wrote, sorted by partition id. `body` gets the commit's
+    * [[MetricsFold]] and `append`, which writes a Dataset into
+    * `output/run=<runId>`; its first call replaces what a crashed commit
+    * left there. `body` must append at least once, and must pass each row
+    * it appends through the fold once, in the stage that feeds the write;
+    * rows of a later append go through `fold.after(n)`, `n` the partitions
+    * written before. If `body` throws, the run stays uncommitted.
+    */
+  def commit(spark: SparkSession, runId: String)(
+      body: (MetricsFold, Dataset[ExtractedDoc] => Unit) => Unit): Seq[PartitionMetrics] = {
     // committedRuns skips dot-names, and a separator would nest the marker
     require(runId.nonEmpty && !runId.startsWith(".") && !runId.exists(c => c == '/' || c == '\\'),
       s"run id '$runId' must be non-empty, not start with '.', and hold no path separator")
     require(!Files.exists(p("_commits", runId)), s"run $runId is already committed")
     val rows = new CollectionAccumulator[PartitionMetrics]
-    val result = build(new MetricsFold(runId, rows))
-    val spark = result.sparkSession
     spark.sparkContext.register(rows, s"metrics run=$runId")
     val output = p("output", s"run=$runId").toString
-    result.write.mode(SaveMode.Overwrite).parquet(output)
+    var mode = SaveMode.Overwrite
+    body(new MetricsFold(runId, rows), ds => { ds.write.mode(mode).parquet(output); mode = SaveMode.Append })
     val metrics = rows.value.asScala.toSeq.sortBy(_.partition_id)
     spark.createDataset(metrics)(Encoders.product[PartitionMetrics])
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(p("metrics", s"run=$runId").toString)
@@ -83,7 +76,7 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
     metrics
   }
 
-  override def committedRuns: Seq[String] = {
+  def committedRuns: Seq[String] = {
     val dir = p("_commits")
     if (!Files.isDirectory(dir)) Seq.empty
     else {
@@ -94,13 +87,14 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
     }
   }
 
-  /** Every committed manifest, read with its known schema (no footer job to
-    * infer it) and without a `distinct`: the resume anti-join only asks
-    * whether an id matches, so a duplicate id changes nothing, and leaving
-    * out the distinct leaves the manifest side a scan plus broadcast, with
-    * no exchange.
+  /** The doc ids of every committed run's manifest, for the resume
+    * anti-join, read with their known schema (no footer job to infer it)
+    * and without a `distinct`: an id may appear more than once. The
+    * anti-join only asks whether an id matches, so a duplicate changes
+    * nothing, and leaving out the distinct leaves the manifest side a scan
+    * plus broadcast, with no exchange.
     */
-  override def committedDocIds(spark: SparkSession): Dataset[String] = {
+  def committedDocIds(spark: SparkSession): Dataset[String] = {
     import spark.implicits._
     val runs = committedRuns
     if (runs.isEmpty) spark.emptyDataset[String]
@@ -110,7 +104,8 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
     }
   }
 
-  override def runMetrics(spark: SparkSession, runId: String): Dataset[PartitionMetrics] = {
+  /** The per-partition metrics a committed run wrote. */
+  def runMetrics(spark: SparkSession, runId: String): Dataset[PartitionMetrics] = {
     require(Files.exists(p("_commits", runId)), s"run $runId is not committed")
     // the known schema spares a footer-reading job for schema inference
     val enc = Encoders.product[PartitionMetrics]
@@ -119,14 +114,30 @@ final class ParquetSnapshotStore(root: String) extends SnapshotStore {
 }
 
 object Lineage {
-  /** Full resumable run: read committed manifest → anti-join → extract →
-    * commit snapshot. Returns the metrics rows the commit wrote (what
-    * [[SnapshotStore.runMetrics]] reads back); the committed docs are in
-    * the `output/run=<runId>` table.
+  /** Full resumable run: read the committed manifests → anti-join →
+    * extract → commit snapshot, in one commit body of one or two jobs:
+    *   1. [[ExtractPipeline.routed]] writes `todo` through one scan: it
+    *      extracts and folds each small doc, and collects each mega-doc's id;
+    *   2. only when ids came back, [[ExtractPipeline.salted]] appends the
+    *      salted extraction of those docs, read again from `input`.
+    * Returns the metrics rows the commit wrote (what
+    * [[ParquetSnapshotStore.runMetrics]] reads back); the committed docs are
+    * in the `output/run=<runId>` table.
     */
-  def run(input: Dataset[Doc], store: SnapshotStore, runId: String,
+  def run(input: Dataset[Doc], store: ParquetSnapshotStore, runId: String,
       cfg: ExtractPipeline.PipelineConfig = ExtractPipeline.PipelineConfig()): Seq[PartitionMetrics] = {
-    val todo = ExtractPipeline.resume(input, store.committedDocIds(input.sparkSession))
-    store.commit(runId)(fold => ExtractPipeline.extract(todo, cfg, fold))
+    val spark = input.sparkSession
+    val todo = ExtractPipeline.resume(input, store.committedDocIds(spark))
+    store.commit(spark, runId) { (fold, append) =>
+      val megaIds = spark.sparkContext.collectionAccumulator[String](s"mega docs run=$runId")
+      val tasks = spark.sparkContext.longAccumulator(s"routed tasks run=$runId")
+      append(ExtractPipeline.routed(todo, cfg, fold, megaIds, tasks))
+      val ids = megaIds.value.asScala.toSeq
+      // The resume anti-join is by doc_id, so these rows are exactly
+      // todo.where(isMega), read with no manifest scan or broadcast.
+      if (ids.nonEmpty)
+        append(ExtractPipeline.salted(input.where(ExtractPipeline.isMega(cfg) && col("doc_id").isin(ids: _*)),
+          cfg, fold.after(tasks.value.toInt)))
+    }
   }
 }

@@ -1,10 +1,21 @@
 package graft.pipeline
 
 import graft.core.Extractor
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.execution.{AppendColumnsWithObjectExec, FileSourceScanExec, MapGroupsExec, QueryExecution, SerializeFromObjectExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ExchangeQueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_COL}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
-class ExtractPipelineSpec extends AnyFunSuite {
+class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -277,5 +288,137 @@ class ExtractPipelineSpec extends AnyFunSuite {
       intercept[IllegalArgumentException](store.commitRun(runId, result))
     assert(!java.nio.file.Files.exists(tmp.resolve("output")))
     assert(store.committedRuns.isEmpty)
+  }
+
+  private def has(plan: SparkPlan)(p: SparkPlan => Boolean): Boolean = find(plan)(p).isDefined
+
+  private def saltedChain(p: SparkPlan): Boolean =
+    p.isInstanceOf[MapGroupsExec] || p.isInstanceOf[AppendColumnsWithObjectExec]
+
+  /** Whether `p` writes a run's `table` (`output`, `manifest`...) in the
+    * store at `root`.
+    */
+  private def writesTo(root: String, table: String)(p: SparkPlan): Boolean = has(p) {
+    case w: DataWritingCommandExec => w.cmd match {
+      case i: InsertIntoHadoopFsRelationCommand =>
+        i.outputPath.getParent.getName == table && i.outputPath.toString.contains(root)
+      case _ => false
+    }
+    case _ => false
+  }
+
+  /** The file scans in `p` that read the table at `path`. */
+  private def scansOf(path: String)(p: SparkPlan): Int =
+    collect(p) { case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains(path)) => s }.length
+
+  /** Commits the extraction of `n` synthetic docs through `Lineage.run` as
+    * run `r1` of a fresh store, reading them from parquet as a production
+    * run does. Returns the input path, the store root and the final plan of
+    * every SQL execution the run made, in order.
+    */
+  private def commitAndPlans(n: Long, cfg: ExtractPipeline.PipelineConfig): (String, String, Seq[SparkPlan]) = {
+    val input = Files.createTempDirectory("docs").resolve("t").toString
+    SynthCorpus.generate(spark, n, seed = 42L, partitions = 8).write.parquet(input)
+    val root = Files.createTempDirectory("lineage").toString
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val corpus = spark.read.parquet(input).as[Doc](Encoders.product[Doc])
+      Lineage.run(corpus, new ParquetSnapshotStore(root), "r1", cfg)
+      // listeners hear of executions asynchronously, in order; the manifest
+      // write is the commit's last
+      eventually(timeout(30.seconds)) { assert(plans.asScala.exists(writesTo(root, "manifest"))) }
+    } finally spark.listenerManager.unregister(listener)
+    (input, root, plans.asScala.toSeq)
+  }
+
+  /** Each output row is serialized once: the result stage of an output
+    * write holds one object serializer.
+    */
+  private def assertOneSerializer(write: SparkPlan): Unit = {
+    def resultStage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: ExchangeQueryStageExec | _: Exchange => Nil
+      case _ => p +: allChildren(p).flatMap(resultStage)
+    }
+    val ops = resultStage(write)
+    assert(ops.count(_.isInstanceOf[SerializeFromObjectExec]) == 1, s"serializers: ${ops.map(_.nodeName)}")
+  }
+
+  /** `d` has the failure, spans and bytes of its synthetic doc's per-doc
+    * extraction.
+    */
+  private def assertReference(d: ExtractedDoc): Unit = {
+    val r = extractWhole(SynthCorpus.mkDoc(d.doc_id.drop(3).toLong, 42L))
+    assert((d.failure, d.spans, d.bytes) == (r.failure, r.spans, r.bytes), d.doc_id)
+  }
+
+  /** Run `r1` under `root` committed every one of the `n` synthetic docs as
+    * the per-doc reference extracts it, its metrics count them all, and its
+    * manifest holds the clean ones.
+    */
+  private def assertCommittedReference(root: String, n: Long): Unit = {
+    import spark.implicits._
+    val output = spark.read.parquet(s"$root/output/run=r1").as[ExtractedDoc].collect().sortBy(_.doc_id).toSeq
+    assert(output.map(_.doc_id) == (0L until n).map(i => s"doc$i").sorted)
+    output.foreach(assertReference)
+    assert(new ParquetSnapshotStore(root).runMetrics(spark, "r1").collect().map(_.docs).sum == n)
+    val manifest = spark.read.parquet(s"$root/manifest/run=r1").as[String].collect().sorted.toSeq
+    assert(manifest == output.filter(_.failure.isEmpty).map(_.doc_id))
+  }
+
+  test("no mega-doc: the run reads its input once, in one output write without the salted chain") {
+    val (input, root, plans) = commitAndPlans(60L, ExtractPipeline.PipelineConfig())
+    val writes = plans.filter(writesTo(root, "output"))
+    assert(writes.length == 1, "expected one output write")
+    assert(plans.map(scansOf(input)).sum == 1, "the input is scanned more than once")
+    assert(!has(writes.head)(saltedChain), "salted chain in the plan")
+    assertOneSerializer(writes.head)
+    assertCommittedReference(root, 60L)
+  }
+
+  test("mega-docs: a second output write salts them, and the output equals the per-doc reference") {
+    val (_, root, plans) = commitAndPlans(40L, ExtractPipeline.PipelineConfig(megaDocBytes = 2048))
+    val writes = plans.filter(writesTo(root, "output"))
+    assert(writes.length == 2, "expected an unsalted and a salted output write")
+    writes.foreach(assertOneSerializer)
+    assert(!has(writes.head)(saltedChain), "salted chain in the unsalted write")
+    // the spread is sized by AQE: a repartition by columns, read coalesced
+    val spread = collect(writes(1)) { case q: ShuffleQueryStageExec if q.shuffle.shuffleOrigin == REPARTITION_BY_COL => q }
+    assert(spread.length == 1, "no salted spread by columns")
+    assert(collect(writes(1)) { case r: AQEShuffleReadExec => r.child }.contains(spread.head),
+      "salted spread not read through AQE")
+    assertCommittedReference(root, 40L)
+  }
+
+  test("a crash between a commit's two output writes commits nothing, and the run id then commits whole") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("lineage")
+    val store = new ParquetSnapshotStore(tmp.toString)
+    val corpus = SynthCorpus.generate(spark, 40L, seed = 42L, partitions = 4)
+    Lineage.run(corpus.filter(d => d.doc_id.drop(3).toLong < 10), store, "r1", mixedCfg)
+    val committed = store.committedDocIds(spark).collect().sorted.toSeq
+    intercept[IllegalStateException] {
+      store.commit(spark, "r2") { (fold, append) =>
+        append(ExtractPipeline.extract(corpus, mixedCfg).map(fold))
+        throw new IllegalStateException("crash before the second write")
+      }
+    }
+    assert(Files.exists(tmp.resolve("output").resolve("run=r2")), "the first write did not run")
+    assert(!Files.exists(tmp.resolve("_commits").resolve("r2")))
+    assert(!Files.exists(tmp.resolve("manifest").resolve("run=r2")))
+    assert(store.committedRuns == Seq("r1"))
+    assert(store.committedDocIds(spark).collect().sorted.toSeq == committed)
+    Lineage.run(corpus, store, "r2", mixedCfg)
+    val out = spark.read.parquet(s"$tmp/output/run=r2").as[ExtractedDoc].collect().sortBy(_.doc_id).toSeq
+    val todo = (0L until 40L).map(i => s"doc$i").filterNot(committed.contains).sorted
+    assert(out.map(_.doc_id) == todo)
+    out.foreach(assertReference)
+    assert(out.exists(d => ExtractPipeline.splitChunks(SynthCorpus.mkDoc(d.doc_id.drop(3).toLong, 42L), mixedCfg).length > 1),
+      "no salted doc in the recommitted run")
+    assert(store.committedRuns == Seq("r1", "r2"))
   }
 }
