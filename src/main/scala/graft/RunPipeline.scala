@@ -21,6 +21,14 @@ import org.apache.spark.sql.{Encoders, SparkSession}
   * partition count. The one-line JSON run summary ([[summaryLine]]) is
   * made from the metrics rows the commit returns, so a run adds no job
   * after its commit and the extraction runs once.
+  *
+  * Right after the session starts, [[HadoopConf.slim]] clears the per-key
+  * source arrays of its Hadoop configuration (same keys, same values), so
+  * each write task decodes a ~68 KB conf instead of a ~113 KB one whose
+  * gzip'd arrays cost ~5 MB of allocation per decode. It runs after the
+  * FileSystem services load: in a cold JVM that load registers HDFS's
+  * default resources, which reloads every conf and would bring the arrays
+  * back.
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
@@ -38,6 +46,7 @@ object RunPipeline {
     val spark = (if (sys.props.contains("spark.master")) builder
                  else builder.master("local[*]")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    HadoopConf.slim(spark)
 
     val docs =
       if (input.startsWith("synth:"))
