@@ -114,33 +114,4 @@ object Dehyphenator {
     }
     (out.toString, pendingHyphen)
   }
-
-  /** Boundary info for salted mega-document chunks: whether the text stream
-    * contains any content line (non-empty, non-hyphen-only after trim) and
-    * the first content code point. A pending hyphen entering a chunk is
-    * consumed at the chunk's first content line (restored iff it starts
-    * uppercase) and passes through chunks with no content lines — this lets
-    * the merge step replay the cross-chunk dehyphenator state exactly.
-    */
-  final case class ContentInfo(sawContent: Boolean, firstCp: Int)
-
-  def firstContentInfo(text: String): ContentInfo = {
-    var lineStart = 0
-    val n = text.length
-    while (lineStart <= n) {
-      var nl = text.indexOf('\n', lineStart)
-      if (nl < 0) nl = n
-      var a = lineStart
-      while (a < nl && isSpace(text.codePointAt(a))) a += Character.charCount(text.codePointAt(a))
-      var b = nl
-      while (b > a && isSpace(text.codePointBefore(b))) b -= Character.charCount(text.codePointBefore(b))
-      if (a < b) {
-        val first = text.codePointAt(a)
-        val hyphenOnly = isHyphen(first) && a + Character.charCount(first) == b
-        if (!hyphenOnly) return ContentInfo(sawContent = true, first)
-      }
-      lineStart = nl + 1
-    }
-    ContentInfo(sawContent = false, 0)
-  }
 }

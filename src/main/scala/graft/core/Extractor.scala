@@ -33,18 +33,16 @@ object Extractor {
   type Span = graft.pipeline.Span
   val Span = graft.pipeline.Span
 
-  /** `pendingHyphenOut` / `sawContent` / `firstContentCp` expose the
-    * dehyphenator boundary state so salted mega-document chunks can be
-    * merged back into the exact unsalted output (see
-    * Dehyphenator.ContentInfo and pipeline.ExtractPipeline).
+  /** `pendingHyphenOut` is the hyphen the dehyphenator stripped at the end
+    * of the input and still holds, the one boundary state the output spans
+    * cannot show; the salted merge (pipeline.ExtractPipeline.mergeChunks)
+    * carries it into the next chunk of a mega-document.
     */
   final case class Result(
       spans: Vector[Span],
       metadata: Map[String, String],
       failure: String, // "" = ok
-      pendingHyphenOut: Int = 0,
-      sawContent: Boolean = false,
-      firstContentCp: Int = 0)
+      pendingHyphenOut: Int = 0)
 
   final case class Config(
       removeNewlines: Boolean = true, // TES_REMOVE_NEWLINES default (config.go:60)
@@ -111,13 +109,6 @@ object Extractor {
     var offset = 0
     var pendingHyphen = 0 // dehyphenator state threaded across page spans
     var failure = ""
-    var sawContent = false
-    var firstContentCp = 0
-
-    def noteContent(raw: String): Unit = if (!sawContent) {
-      val info = Dehyphenator.firstContentInfo(raw)
-      if (info.sawContent) { sawContent = true; firstContentCp = info.firstCp }
-    }
 
     def emitText(t: String): Unit = {
       out += Span("text", t, "", offset); offset += 1
@@ -131,7 +122,6 @@ object Extractor {
 
     /** Pageless formats: whole stream through the dehyphenator, one span. */
     def emitWhole(text: String): Unit = {
-      noteContent(text)
       val (t, pend) = Dehyphenator.dehyphenateChunk(text, cfg.removeNewlines, pendingHyphen)
       pendingHyphen = pend
       emitText(t)
@@ -254,7 +244,7 @@ object Extractor {
     }
 
     if (failure.nonEmpty) Result(Vector.empty, Map.empty, failure)
-    else Result(out.result(), metadata, "", pendingHyphen, sawContent, firstContentCp)
+    else Result(out.result(), metadata, "", pendingHyphen)
   }
 
   private[graft] def decodePayload(text: String): Array[Byte] =

@@ -145,11 +145,6 @@ final class PdfFile(data: Array[Byte]) {
   private def mergeTrailer(base: PdfDict, extra: PdfDict): PdfDict =
     PdfDict(extra.entries ++ base.entries) // earlier (newer) entries win
 
-  private def rawOf(o: PdfObj): Array[Byte] = o match {
-    case s: PdfStreamObj => s.raw
-    case _ => Array.emptyByteArray
-  }
-
   private def loadXrefStream(dict: PdfDict, content: Array[Byte]): Unit = {
     val w = dict.get("W") match {
       case Some(PdfArr(items)) => items.collect { case PdfNum(v) => v.toInt }

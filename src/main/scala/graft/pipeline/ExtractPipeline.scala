@@ -64,7 +64,7 @@ object ExtractPipeline {
   final case class ChunkResult(
       doc_id: String, salt: Int,
       spans: Seq[Span], metadata: Map[String, String], failure: String,
-      bytes: Long, pendingOut: Int, sawContent: Boolean, firstCp: Int)
+      bytes: Long, pendingOut: Int)
 
   def docBytes(spans: Seq[Span]): Long =
     spans.iterator.map(s => s.text.length.toLong + s.media_ref.length).sum
@@ -108,8 +108,11 @@ object ExtractPipeline {
   /** Merge extracted chunks of one doc back into the exact unsalted result:
     * offsets renumbered, and the dehyphenator's cross-chunk pending-hyphen
     * rule replayed (a hyphen stripped at the end of chunk i is restored at
-    * the start of chunk i+1's first content line iff it starts uppercase —
-    * dehyphen.go:144-150 across the chunk boundary).
+    * the start of the next content line iff it starts uppercase —
+    * dehyphen.go:144-150 across the chunk boundary). The dehyphenator emits
+    * nothing for blank and hyphen-only lines, so a chunk's first content
+    * line heads its first text span with text; a chunk without one passes
+    * the pending hyphen on.
     */
   def mergeChunks(docId: String, chunks: Seq[ChunkResult]): ExtractedDoc = {
     val ordered = chunks.sortBy(_.salt)
@@ -122,16 +125,13 @@ object ExtractPipeline {
     var pend = 0
     ordered.foreach { c =>
       var spans = c.spans
-      if (pend != 0 && c.sawContent && Dehyphenator.isUpper(c.firstCp)) {
-        // restore the pending hyphen at the head of this chunk's first text span
-        val idx = spans.indexWhere(_.kind == "text")
-        if (idx >= 0) {
-          val s = spans(idx)
-          spans = spans.updated(idx,
-            s.copy(text = new String(Character.toChars(pend)) + s.text))
-        }
+      val idx = spans.indexWhere(s => s.kind == "text" && s.text.nonEmpty)
+      if (idx >= 0) {
+        val s = spans(idx)
+        if (pend != 0 && Dehyphenator.isUpper(s.text.codePointAt(0)))
+          spans = spans.updated(idx, s.copy(text = new String(Character.toChars(pend)) + s.text))
+        pend = c.pendingOut
       }
-      if (c.sawContent) pend = c.pendingOut
       spans.foreach { s => out += s.copy(offset = offset); offset += 1 }
     }
     val metadata = ordered.foldLeft(Map.empty[String, String])(_ ++ _.metadata)
@@ -149,10 +149,9 @@ object ExtractPipeline {
     input.join(manifest, Seq("doc_id"), "left_anti").as[Doc]
   }
 
-  private def extractChunk(c: Chunk, cfg: PipelineConfig): ChunkResult = {
+  private[pipeline] def extractChunk(c: Chunk, cfg: PipelineConfig): ChunkResult = {
     val r = Extractor.extract(c.doc_id, c.spans, cfg.extractor)
-    ChunkResult(c.doc_id, c.salt, r.spans, r.metadata, r.failure, docBytes(c.spans),
-      r.pendingHyphenOut, r.sawContent, r.firstContentCp)
+    ChunkResult(c.doc_id, c.salt, r.spans, r.metadata, r.failure, docBytes(c.spans), r.pendingHyphenOut)
   }
 
   /** Byte cost as a Catalyst column expression — evaluated on columnar scan

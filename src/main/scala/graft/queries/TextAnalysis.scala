@@ -18,10 +18,6 @@ object TextAnalysis {
   /** words = whitespace split minus empties — identical in both engines. */
   private val WordsExpr = "filter(split(text, ' '), w -> w <> '')"
 
-  /** 60-bit word hash from md5 (portable to DuckDB). */
-  private def whSpark(w: String) =
-    s"cast(conv(substring(md5($w), 1, 15), 16, 10) as bigint)"
-
   /** Token counting: whitespace tokens + BPE-ish regex tokens (letter runs,
     * digit runs, single punctuation) + char count.
     */

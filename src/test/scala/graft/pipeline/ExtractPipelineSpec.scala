@@ -29,27 +29,28 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     ExtractedDoc(doc.doc_id, r.spans, r.metadata, r.failure, ExtractPipeline.docBytes(doc.spans))
   }
 
+  /** `doc` split, extracted chunk by chunk and merged, as the salted branch does. */
+  private def extractSalted(doc: Doc, cfg: ExtractPipeline.PipelineConfig): ExtractedDoc =
+    ExtractPipeline.mergeChunks(doc.doc_id,
+      ExtractPipeline.splitChunks(doc, cfg).map(ExtractPipeline.extractChunk(_, cfg)))
+
+  private def spanKeys(d: ExtractedDoc): Seq[(String, String, String, Int)] =
+    d.spans.map(s => (s.kind, s.text, s.media_ref, s.offset))
+
   test("salting invariance: chunked+merged mega-doc equals unsalted extraction") {
     // force tiny mega threshold so every multi-span doc splits
     val cfg = ExtractPipeline.PipelineConfig(megaDocBytes = 64)
+    var split = 0
     for (id <- 0L until 400L) {
       val doc = SynthCorpus.mkDoc(id, seed = 7L)
-      val chunks = ExtractPipeline.splitChunks(doc, cfg)
-      val results = chunks.map { c =>
-        val r = Extractor.extract(c.doc_id, c.spans)
-        ExtractPipeline.ChunkResult(c.doc_id, c.salt, r.spans, r.metadata, r.failure,
-          ExtractPipeline.docBytes(c.spans), r.pendingHyphenOut, r.sawContent, r.firstContentCp)
-      }
-      val merged = ExtractPipeline.mergeChunks(doc.doc_id, results)
+      if (ExtractPipeline.splitChunks(doc, cfg).length > 1) split += 1
+      val merged = extractSalted(doc, cfg)
       val whole = extractWhole(doc)
-      val mergedText = merged.spans.filter(_.kind == "text").map(_.text).mkString
-      val wholeText = whole.spans.filter(_.kind == "text").map(_.text).mkString
-      assert(mergedText == wholeText, s"doc $id (${chunks.length} chunks) text diverged")
-      assert(merged.spans.map(s => (s.kind, s.media_ref)) ==
-        whole.spans.map(s => (s.kind, s.media_ref)), s"doc $id span structure diverged")
-      assert(merged.spans.map(_.offset) == merged.spans.indices, s"doc $id offsets not renumbered")
-      assert(merged.failure == whole.failure)
+      assert(spanKeys(merged) == spanKeys(whole), s"doc $id spans diverged")
+      assert(merged.failure == whole.failure, s"doc $id failure diverged")
+      assert(merged.bytes == whole.bytes, s"doc $id bytes diverged")
     }
+    assert(split > 0, "no doc splits at 64 bytes")
   }
 
   test("cross-chunk pending hyphen: restored before uppercase, dropped before lowercase") {
@@ -57,20 +58,25 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val mk = (cont: String) => Doc("d", Seq(
       Span("text", "eine Zeile wei-\n", "", 0),
       Span("text", cont + "\n", "", 1)))
-    val cfg = ExtractPipeline.PipelineConfig(megaDocBytes = 4)
+    val cfg = ExtractPipeline.PipelineConfig(Extractor.Config(removeNewlines = false), megaDocBytes = 4)
     def runSplit(doc: Doc): String = {
-      val chunks = ExtractPipeline.splitChunks(doc, cfg)
-      assert(chunks.length == 2, "expected the doc to split")
-      val results = chunks.map { c =>
-        val r = Extractor.extract(c.doc_id, c.spans, Extractor.Config(removeNewlines = false))
-        ExtractPipeline.ChunkResult(c.doc_id, c.salt, r.spans, r.metadata, r.failure, 0L,
-          r.pendingHyphenOut, r.sawContent, r.firstContentCp)
-      }
-      ExtractPipeline.mergeChunks(doc.doc_id, results)
-        .spans.map(_.text).mkString
+      assert(ExtractPipeline.splitChunks(doc, cfg).length == 2, "expected the doc to split")
+      extractSalted(doc, cfg).spans.map(_.text).mkString
     }
     assert(runSplit(mk("ter")) == "eine Zeile weiter\n")
     assert(runSplit(mk("Institution")) == "eine Zeile wei-Institution\n")
+  }
+
+  test("cross-chunk pending hyphen: restored on the chunk's first span with text, past a blank span") {
+    val doc = Doc("d", Seq(
+      Span("text", "eine Zeile wei-\n", "", 0),
+      Span("text", "\n", "", 1),
+      Span("text", "Institution folgt\n", "", 2)))
+    val cfg = ExtractPipeline.PipelineConfig(megaDocBytes = 4)
+    assert(ExtractPipeline.splitChunks(doc, cfg).map(_.spans.length) == Seq(1, 2))
+    val whole = extractWhole(doc)
+    assert(whole.spans.map(_.text) == Seq("eine Zeile wei", "", "-Institution folgt "))
+    assert(spanKeys(extractSalted(doc, cfg)) == spanKeys(whole))
   }
 
   test("end-to-end Spark extraction on the synthetic corpus") {
