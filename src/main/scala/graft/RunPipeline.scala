@@ -6,21 +6,19 @@ import org.apache.spark.sql.{Encoders, SparkSession}
 /** spark-submit entry point for the production pipeline:
   *
   *   spark-submit --class graft.RunPipeline app.jar \
-  *     <inputParquet|synth:N> <lineageRoot> <runId> [numPartitions]
+  *     <inputParquet> <lineageRoot> <runId> [numPartitions]
   *
   * Reads the interleaved-span table (BASELINE.json input_hint schema),
   * resumes from the lineage root's last committed snapshot, extracts, and
   * commits output/metrics/manifest atomically ([[Lineage.run]]: one job
   * that scans the input once, plus a salted job only when some doc is
   * mega). The session is a plain one: nothing on this path resolves a SQL
-  * function by name, so it installs no extension. When the input is
-  * "synth:<n>" a deterministic corpus of n docs is generated instead (no
-  * external data). `numPartitions` (default 32) sets
-  * `spark.sql.shuffle.partitions`: the starting width of the salted
-  * spread shuffle, which AQE coalesces, and the synthetic corpus's
-  * partition count. The one-line JSON run summary ([[summaryLine]]) is
-  * made from the metrics rows the commit returns, so a run adds no job
-  * after its commit and the extraction runs once.
+  * function by name, so it installs no extension. `numPartitions`
+  * (default 32) sets `spark.sql.shuffle.partitions`: the starting width of
+  * the salted spread shuffle, which AQE coalesces. The one-line JSON run
+  * summary ([[summaryLine]]) is made from the metrics rows the commit
+  * returns, so a run adds no job after its commit and the extraction runs
+  * once.
   *
   * Right after the session starts, [[HadoopConf.slim]] clears the per-key
   * source arrays of its Hadoop configuration (same keys, same values), so
@@ -33,7 +31,7 @@ import org.apache.spark.sql.{Encoders, SparkSession}
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
-      "usage: RunPipeline <inputParquet|synth:N> <lineageRoot> <runId> [numPartitions]")
+      "usage: RunPipeline <inputParquet> <lineageRoot> <runId> [numPartitions]")
     val Array(input, lineageRoot, runId) = args.take(3)
     val numPartitions = if (args.length > 3) args(3).toInt else 32
 
@@ -48,10 +46,7 @@ object RunPipeline {
     spark.sparkContext.setLogLevel("WARN")
     HadoopConf.slim(spark)
 
-    val docs =
-      if (input.startsWith("synth:"))
-        SynthCorpus.generate(spark, input.drop(6).toLong, partitions = numPartitions)
-      else spark.read.parquet(input).as[Doc](Encoders.product[Doc])
+    val docs = spark.read.parquet(input).as[Doc](Encoders.product[Doc])
 
     val store = new ParquetSnapshotStore(lineageRoot)
     val rows = Lineage.run(docs, store, runId)

@@ -155,7 +155,7 @@ object Extractor {
               case "bin" =>
                 sniff(payload) match {
                   case "" => ""
-                  case "zip" => zipExt(payload)
+                  case "zip" => "bin" // an office zip; OfficeXml.parse names its kind
                   case "ole" => "doc" // refined by CFB streams later
                   case k => k
                 }
@@ -174,7 +174,7 @@ object Extractor {
                   out += Span("media", "", s"image:$docId/span${s.offset}.$ext", offset)
                   offset += 1
                 }
-              case "docx" | "odt" | "pptx" | "odp" =>
+              case "docx" | "odt" | "pptx" | "odp" | "bin" =>
                 val d = OfficeXml.parse(payload, kind)
                 metadata ++= d.metadata
                 if (d.pages > 0) emitPages(d.contentTexts)
@@ -331,31 +331,4 @@ object Extractor {
     if (dp == dstLen) dst else java.util.Arrays.copyOf(dst, dp)
   }
 
-  /** Distinguish docx/odt/pptx/odp inside a sniffed zip by member names. */
-  private def zipExt(data: Array[Byte]): String = {
-    var hasWordDoc = false
-    var hasSlides = false
-    var mimetype = ""
-    val zin = new java.util.zip.ZipInputStream(new java.io.ByteArrayInputStream(data))
-    try {
-      var e = zin.getNextEntry
-      while (e != null) {
-        val n = e.getName
-        if (n == "word/document.xml") hasWordDoc = true
-        else if (n.startsWith("ppt/slides/")) hasSlides = true
-        else if (n == "mimetype") {
-          val buf = new Array[Byte](128)
-          val k = zin.read(buf)
-          if (k > 0) mimetype = new String(buf, 0, k, "US-ASCII").trim
-        }
-        zin.closeEntry()
-        e = zin.getNextEntry
-      }
-    } catch { case _: Exception => } finally zin.close()
-    if (hasWordDoc) "docx"
-    else if (hasSlides) "pptx"
-    else if (mimetype.contains("opendocument.presentation")) "odp"
-    else if (mimetype.contains("opendocument.text")) "odt"
-    else "odt" // zip with content.xml defaults to ODF text
-  }
 }

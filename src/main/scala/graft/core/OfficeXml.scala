@@ -57,21 +57,25 @@ object OfficeXml {
       f
     }
 
+  /** Parses a docx, pptx, odt or odp archive; `ext` is its kind, or "bin"
+    * for a zip sniffed from a `bin` span, whose kind [[kindOf]] tells from
+    * the same walk.
+    */
   def parse(data: Array[Byte], ext: String): OfficeDoc = {
     val wanted = (n: String) =>
       ContentFileNames.contains(n) ||
         (n.startsWith("ppt/slides/") && n.endsWith(".xml")) ||
         n == "meta.xml" || n == "docProps/app.xml" || n == "docProps/core.xml"
-    val entries = ZipArchive.entries(data, wanted)
+    val archive = ZipArchive.read(data, wanted)
 
     val md = mutable.LinkedHashMap[String, String](
       "x-parsed-by" -> "text-extraction-service",
-      "x-doctype" -> ext)
+      "x-doctype" -> (if (ext == "bin") kindOf(archive) else ext))
 
     var bodyTag = "body"
     val content = Vector.newBuilder[(Int, Int, ZipArchive.Entry)] // (sortNum, idx, e)
     var idx = 0
-    entries.foreach { e =>
+    archive.entries.foreach { e =>
       e.name match {
         case n if ContentFileNames.contains(n) =>
           content += ((0, idx, e)); idx += 1
@@ -94,6 +98,13 @@ object OfficeXml {
     val texts = sorted.map { case (_, _, e) => xmlToText(e.data, bodyTag) }
     OfficeDoc(texts, md.toMap, isSlides = bodyTag == "cSld")
   }
+
+  /** docx/pptx/odp/odt by member names, then by mimetype. */
+  private def kindOf(a: ZipArchive.Archive): String =
+    if (a.names.contains("word/document.xml")) "docx"
+    else if (a.names.exists(_.startsWith("ppt/slides/"))) "pptx"
+    else if (a.mimetype.contains("opendocument.presentation")) "odp"
+    else "odt" // opendocument.text, or a zip with content.xml: ODF text
 
   /** Go regexp `\s` is ASCII [\t\n\f\r ] — match it exactly, not Java \s. */
   private def isAsciiWs(c: Char): Boolean =

@@ -16,24 +16,36 @@ object ZipArchive {
   final class EntryTooBigException(name: String)
     extends RuntimeException(s"zip entry '$name' exceeds 50 MiB")
 
-  /** Lists entries in stream (local header) order. `select` gates which
-    * entries get their bytes materialized — everything else is skipped
-    * cheaply (the inflater never runs for unselected entries' payloads).
+  /** One walk over an archive: the entries `select` picked, in stream
+    * (local header) order; the name of every entry, directories included;
+    * and the first read (at most 128 bytes) of the last non-empty
+    * `mimetype` entry, which is never selected. An entry that is not
+    * selected is skipped (`closeEntry` still inflates it to find the next).
     */
-  def entries(data: Array[Byte], select: String => Boolean): Vector[Entry] = {
+  final case class Archive(entries: Vector[Entry], names: Vector[String], mimetype: String)
+
+  def read(data: Array[Byte], select: String => Boolean): Archive = {
     val zin = new ZipInputStream(new ByteArrayInputStream(data))
     val out = Vector.newBuilder[Entry]
+    val names = Vector.newBuilder[String]
+    var mimetype = ""
     try {
       var e = zin.getNextEntry
       while (e != null) {
-        if (!e.isDirectory && select(e.getName)) {
-          out += Entry(e.getName, readCapped(zin, e.getName))
+        val n = e.getName
+        names += n
+        if (n == "mimetype") {
+          val buf = new Array[Byte](128)
+          val k = zin.read(buf)
+          if (k > 0) mimetype = new String(buf, 0, k, java.nio.charset.StandardCharsets.US_ASCII)
+        } else if (!e.isDirectory && select(n)) {
+          out += Entry(n, readCapped(zin, n))
         }
         zin.closeEntry()
         e = zin.getNextEntry
       }
     } finally zin.close()
-    out.result()
+    Archive(out.result(), names.result(), mimetype)
   }
 
   // Per-thread reusable read buffer + growable scratch: the 8 KB chunk and

@@ -6,62 +6,31 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions installer — enables
   * `spark.sql.extensions=graft.functions.GraftExtensions` on any cluster,
-  * injecting the extraction and vector scalar functions into every session
-  * (SURVEY §4: injectFunction path).
+  * injecting every [[NativeFn]] of [[SpanExpressions]] and
+  * [[VectorExpressions]] into every session (SURVEY §4: injectFunction
+  * path), so SQL and the Column API expose the same functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   /** Builder with an explicit arity check: a wrong-arity SQL call must be
-    * an analysis-time error, not a raw IndexOutOfBoundsException from
-    * `exprs(1)` inside the builder.
+    * an analysis-time error, not a call with missing or extra arguments.
     */
-  private def fn(name: String, className: String, arity: Int)(
-      build: Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo(className, name),
+  private def description(f: NativeFn) = (
+    FunctionIdentifier(f.name),
+    new ExpressionInfo(classOf[NativeCall].getName, f.name),
     (exprs: Seq[Expression]) => {
-      if (exprs.length != arity)
+      if (exprs.length != f.inputTypes.length)
         throw new org.apache.spark.sql.AnalysisException(
           errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
           messageParameters = Map(
-            "functionName" -> name,
-            "expectedNum" -> arity.toString,
+            "functionName" -> f.name,
+            "expectedNum" -> f.inputTypes.length.toString,
             "actualNum" -> exprs.length.toString,
             "docroot" -> "https://spark.apache.org/docs/latest"))
-      build(exprs)
+      NativeCall(f, exprs)
     })
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(fn("dehyphenate",
-      classOf[SpanExpressions.Dehyphenate].getName, 2)(
-      exprs => SpanExpressions.Dehyphenate(exprs.head, exprs(1))))
-    ext.injectFunction(fn("strip_boilerplate",
-      classOf[SpanExpressions.StripBoilerplate].getName, 1)(
-      exprs => SpanExpressions.StripBoilerplate(exprs.head)))
-    ext.injectFunction(fn("span_byte_cost",
-      classOf[SpanExpressions.SpanByteCost].getName, 1)(
-      exprs => SpanExpressions.SpanByteCost(exprs.head)))
-    // dedup/similarity vector kernels (VectorExpressions)
-    ext.injectFunction(fn("dot_i64",
-      classOf[VectorExpressions.DotI64].getName, 2)(
-      exprs => VectorExpressions.DotI64(exprs.head, exprs(1))))
-    ext.injectFunction(fn("quantize_i64",
-      classOf[VectorExpressions.QuantizeI64].getName, 1)(
-      exprs => VectorExpressions.QuantizeI64(exprs.head)))
-    ext.injectFunction(fn("shingles3",
-      classOf[VectorExpressions.Shingles3].getName, 1)(
-      exprs => VectorExpressions.Shingles3(exprs.head)))
-    ext.injectFunction(fn("h31",
-      classOf[VectorExpressions.H31].getName, 1)(
-      exprs => VectorExpressions.H31(exprs.head)))
-    ext.injectFunction(fn("minhash_sigs",
-      classOf[VectorExpressions.MinhashSigs].getName, 1)(
-      exprs => VectorExpressions.MinhashSigs(exprs.head)))
-    ext.injectFunction(fn("simhash32",
-      classOf[VectorExpressions.Simhash32].getName, 1)(
-      exprs => VectorExpressions.Simhash32(exprs.head)))
-    ext.injectFunction(fn("fingerprint64",
-      classOf[VectorExpressions.Fingerprint64].getName, 1)(
-      exprs => VectorExpressions.Fingerprint64(exprs.head)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    (SpanExpressions.functions ++ VectorExpressions.functions)
+      .foreach(f => ext.injectFunction(description(f)))
 }

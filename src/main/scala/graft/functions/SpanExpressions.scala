@@ -1,65 +1,24 @@
 package graft.functions
 
 import graft.core.Dehyphenator
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the extraction functions that are useful
-  * directly in DataFrame/SQL land (SURVEY §4: "UDF-free where possible" —
-  * a native Expression with doGenCode beats a Scala UDF: no closure
-  * serialization, participates in whole-stage codegen via a static call).
+/** The extraction kernels that are useful directly in DataFrame/SQL land,
+  * as [[NativeFn]]s (SURVEY §4: "UDF-free where possible" — a static call
+  * from generated code needs no closure serialization and takes part in
+  * whole-stage codegen). Each kernel below is a static entry point; the
+  * functions at the end name them for SQL and the Column API.
   */
 object SpanExpressions {
 
-  /** Static entry points referenced from generated code. */
   def dehyphenateUTF8(s: UTF8String, removeNewlines: Boolean): UTF8String =
-    if (s == null) null
-    else UTF8String.fromString(Dehyphenator.dehyphenate(s.toString, removeNewlines))
+    UTF8String.fromString(Dehyphenator.dehyphenate(s.toString, removeNewlines))
 
   def stripBoilerplateUTF8(s: UTF8String): UTF8String =
-    if (s == null) null
-    else UTF8String.fromString(graft.core.Boilerplate.extractContent(s.toString))
-
-  /** dehyphenate(text, removeNewlines) — the T1/T2 kernel as a SQL scalar. */
-  case class Dehyphenate(left: Expression, right: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
-    override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(StringType, BooleanType)
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = left.nullable
-
-    override def nullSafeEval(text: Any, rm: Any): Any =
-      dehyphenateUTF8(text.asInstanceOf[UTF8String], rm.asInstanceOf[Boolean])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (t, r) =>
-        s"${ev.value} = graft.functions.SpanExpressions.dehyphenateUTF8($t, $r);")
-
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Dehyphenate =
-      copy(left = l, right = r)
-  }
-
-  /** strip_boilerplate(html) — the north-star block classifier as a scalar. */
-  case class StripBoilerplate(child: Expression)
-      extends UnaryExpression with ImplicitCastInputTypes {
-    override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(StringType)
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = child.nullable
-
-    override def nullSafeEval(html: Any): Any =
-      stripBoilerplateUTF8(html.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, h =>
-        s"graft.functions.SpanExpressions.stripBoilerplateUTF8($h)")
-
-    override protected def withNewChildInternal(c: Expression): StripBoilerplate =
-      copy(child = c)
-  }
+    UTF8String.fromString(graft.core.Boilerplate.extractContent(s.toString))
 
   /** Payload byte cost of a span array (drives mega-doc salting). Static
     * entry point for generated code. Sums UTF-8 numBytes of text+media_ref —
@@ -78,29 +37,6 @@ object SpanExpressions {
       i += 1
     }
     total
-  }
-
-  /** span_byte_cost(spans: array<struct<kind,text,media_ref,offset>>) → bigint */
-  case class SpanByteCost(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.LongType
-    override def nullable: Boolean = child.nullable
-    // the eval reads struct fields 1 and 2 as strings by ordinal — anything
-    // else must be an analysis error, not a garbage read on UnsafeArrayData
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(s: StructType, _) if s.length == 4 &&
-          s(1).dataType == StringType && s(2).dataType == StringType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        "span_byte_cost expects array<struct<kind:string,text:string," +
-          s"media_ref:string,offset:int>>, got ${other.simpleString}")
-    }
-    override def nullSafeEval(spans: Any): Any =
-      spanByteCost(spans.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, s =>
-        s"${ev.value} = graft.functions.SpanExpressions.spanByteCost($s);")
-    override protected def withNewChildInternal(c: Expression): SpanByteCost =
-      copy(child = c)
   }
 
   /** UTF-16 code-unit count of a UTF8String — exactly Java `String.length`
@@ -144,53 +80,38 @@ object SpanExpressions {
       Array[Any](n, nChars, nMedia))
   }
 
+  // ------------------------------------------------------------ functions
+
+  /** A Doc's `spans` column ([[graft.pipeline.Span]]). The span kernels
+    * read fields by ordinal, so a span array of any other shape must be an
+    * analysis error, not a garbage read on UnsafeArrayData.
+    */
+  private val SpanArray =
+    ArrayType(StructType.fromDDL("kind string, text string, media_ref string, offset int"))
+
+  /** dehyphenate(text, removeNewlines) — the T1/T2 kernel as a SQL scalar. */
+  val Dehyphenate = NativeFn("dehyphenate", getClass, "dehyphenateUTF8",
+    StringType, StringType, BooleanType)
+  /** strip_boilerplate(html) — the north-star block classifier as a scalar. */
+  val StripBoilerplate = NativeFn("strip_boilerplate", getClass, "stripBoilerplateUTF8",
+    StringType, StringType)
+  /** span_byte_cost(spans) → bigint */
+  val SpanByteCost = NativeFn("span_byte_cost", getClass, "spanByteCost",
+    LongType, SpanArray)
   /** span_stats(spans) → struct<n_spans:int, n_chars:bigint, n_media:int> —
-    * the extract_pipeline envelope fold as a codegen'd expression (the
-    * typed Dataset.map it replaces deserialized every span, payload text
-    * included, into JVM objects just to count them).
+    * the extract_pipeline envelope fold (the typed Dataset.map it replaces
+    * deserialized every span, payload text included, into JVM objects just
+    * to count them).
     */
-  case class SpanStats(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = new StructType()
-      .add("n_spans", org.apache.spark.sql.types.IntegerType, nullable = false)
-      .add("n_chars", org.apache.spark.sql.types.LongType, nullable = false)
-      .add("n_media", org.apache.spark.sql.types.IntegerType, nullable = false)
-    override def nullable: Boolean = child.nullable
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(s: StructType, _) if s.length == 4 &&
-          s(0).dataType == StringType && s(1).dataType == StringType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        "span_stats expects array<struct<kind:string,text:string," +
-          s"media_ref:string,offset:int>>, got ${other.simpleString}")
-    }
-    override def nullSafeEval(spans: Any): Any =
-      spanStats(spans.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, s =>
-        s"${ev.value} = graft.functions.SpanExpressions.spanStats($s);")
-    override protected def withNewChildInternal(c: Expression): SpanStats =
-      copy(child = c)
-  }
+  val SpanStats = NativeFn("span_stats", getClass, "spanStats", new StructType()
+    .add("n_spans", IntegerType, nullable = false)
+    .add("n_chars", LongType, nullable = false)
+    .add("n_media", IntegerType, nullable = false), SpanArray)
 
-  // Column-API surface (Spark 4: Column ↔ Expression via the sql-package bridge)
-  import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpr}
+  val functions: Seq[NativeFn] = Seq(Dehyphenate, StripBoilerplate, SpanByteCost, SpanStats)
 
-  def span_stats(spans: Column): Column = toColumn(SpanStats(toExpr(spans)))
-
-  def span_byte_cost(spans: Column): Column = toColumn(SpanByteCost(toExpr(spans)))
-  def dehyphenate(text: Column, removeNewlines: Column): Column =
-    toColumn(Dehyphenate(toExpr(text), toExpr(removeNewlines)))
-
-  def strip_boilerplate(html: Column): Column =
-    toColumn(StripBoilerplate(toExpr(html)))
-
-  /** Register as SQL functions on a session (SparkSessionExtensions-free
-    * path; usable from spark.sql too).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dehyphenate", exprs => Dehyphenate(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "strip_boilerplate", exprs => StripBoilerplate(exprs.head), "built-in")
-  }
+  def dehyphenate(text: Column, removeNewlines: Column): Column = Dehyphenate(text, removeNewlines)
+  def strip_boilerplate(html: Column): Column = StripBoilerplate(html)
+  def span_byte_cost(spans: Column): Column = SpanByteCost(spans)
+  def span_stats(spans: Column): Column = SpanStats(spans)
 }

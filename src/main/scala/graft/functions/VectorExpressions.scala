@@ -1,18 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the dedup/similarity hot kernels.
+/** The dedup/similarity hot kernels as [[NativeFn]]s.
   *
   * Spark's higher-order functions (`transform`/`aggregate`/`zip_with`) are
   * NOT whole-stage-codegen'd — every lambda application walks an interpreted
   * expression tree (~430 µs for a 64-dim integer dot product measured at
-  * round 1). These expressions compute the same values in tight JVM loops
+  * round 1). These kernels compute the same values in tight JVM loops
   * reachable from generated code via static calls, so a 64-dim dot costs
   * ~64 multiply-adds instead.
   *
@@ -293,148 +291,42 @@ object VectorExpressions {
       Array[Any](nWords, sumWlen, nCp, nPunct, nStop, seen.size(), sEn, sDe, sEs, sFr))
   }
 
+  // ------------------------------------------------------------ functions
+
+  val DotI64 = NativeFn("dot_i64", getClass, "dotI64",
+    LongType, ArrayType(LongType), ArrayType(LongType))
+  val Shingles3 = NativeFn("shingles3", getClass, "shingles3",
+    ArrayType(StringType, containsNull = false), StringType)
+  val H31 = NativeFn("h31", getClass, "h31",
+    ArrayType(LongType, containsNull = false), ArrayType(StringType))
+  val MinhashSigs = NativeFn("minhash_sigs", getClass, "minhashSigs",
+    ArrayType(LongType, containsNull = false), ArrayType(LongType))
+  val Simhash32 = NativeFn("simhash32", getClass, "simhash32", LongType, StringType)
+  val QuantizeI64 = NativeFn("quantize_i64", getClass, "quantizeI64",
+    ArrayType(LongType, containsNull = false), ArrayType(FloatType))
+  val Fingerprint64 = NativeFn("fingerprint64", getClass, "fingerprint64", LongType, StringType)
   /** text_stats(text) → struct of the raw quality/langid tallies. */
-  case class TextStats(child: Expression)
-      extends UnaryExpression with ImplicitCastInputTypes {
-    override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(StringType)
-    override def dataType: DataType = new StructType()
-      .add("n_words", IntegerType, nullable = false)
-      .add("sum_wlen", LongType, nullable = false)
-      .add("n_cp", LongType, nullable = false)
-      .add("n_punct", LongType, nullable = false)
-      .add("n_stop", IntegerType, nullable = false)
-      .add("n_uniq", IntegerType, nullable = false)
-      .add("s_en", IntegerType, nullable = false)
-      .add("s_de", IntegerType, nullable = false)
-      .add("s_es", IntegerType, nullable = false)
-      .add("s_fr", IntegerType, nullable = false)
-    override def nullable: Boolean = child.nullable
-    override def nullSafeEval(t: Any): Any = textStats(t.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, t =>
-        s"${ev.value} = graft.functions.VectorExpressions.textStats($t);")
-    override protected def withNewChildInternal(c: Expression): TextStats =
-      copy(child = c)
-  }
+  val TextStats = NativeFn("text_stats", getClass, "textStats", new StructType()
+    .add("n_words", IntegerType, nullable = false)
+    .add("sum_wlen", LongType, nullable = false)
+    .add("n_cp", LongType, nullable = false)
+    .add("n_punct", LongType, nullable = false)
+    .add("n_stop", IntegerType, nullable = false)
+    .add("n_uniq", IntegerType, nullable = false)
+    .add("s_en", IntegerType, nullable = false)
+    .add("s_de", IntegerType, nullable = false)
+    .add("s_es", IntegerType, nullable = false)
+    .add("s_fr", IntegerType, nullable = false), StringType)
 
-  // ------------------------------------------------------------ expressions
+  val functions: Seq[NativeFn] =
+    Seq(DotI64, Shingles3, H31, MinhashSigs, Simhash32, QuantizeI64, Fingerprint64, TextStats)
 
-  // Every expression declares ImplicitCastInputTypes: these are registered
-  // as SQL functions (GraftExtensions), where a user's natural literal —
-  // `quantize_i64(array(0.1, 0.2))` is array<double> — would otherwise be
-  // read with the wrong accessor width on UnsafeArrayData and silently
-  // return garbage. Declared input types make Catalyst insert the cast or
-  // reject the call at analysis time.
-
-  /** dot_i64(array<bigint>, array<bigint>) → bigint */
-  case class DotI64(left: Expression, right: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
-    override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] =
-      Seq(ArrayType(LongType), ArrayType(LongType))
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = left.nullable || right.nullable
-    override def nullSafeEval(a: Any, b: Any): Any =
-      dotI64(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.VectorExpressions.dotI64($a, $b);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): DotI64 =
-      copy(left = l, right = r)
-  }
-
-  /** shingles3(text) → array<string> */
-  case class Shingles3(child: Expression)
-      extends UnaryExpression with ImplicitCastInputTypes {
-    override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(StringType)
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullable: Boolean = child.nullable
-    override def nullSafeEval(t: Any): Any = shingles3(t.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, t =>
-        s"${ev.value} = graft.functions.VectorExpressions.shingles3($t);")
-    override protected def withNewChildInternal(c: Expression): Shingles3 =
-      copy(child = c)
-  }
-
-  /** h31(array<string>) → array<bigint> */
-  case class H31(child: Expression)
-      extends UnaryExpression with ImplicitCastInputTypes {
-    override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(ArrayType(StringType))
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = child.nullable
-    override def nullSafeEval(a: Any): Any = h31(a.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.VectorExpressions.h31($a);")
-    override protected def withNewChildInternal(c: Expression): H31 =
-      copy(child = c)
-  }
-
-  /** minhash_sigs(array<bigint>) → array<bigint> (length 8) */
-  case class MinhashSigs(child: Expression)
-      extends UnaryExpression with ImplicitCastInputTypes {
-    override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(ArrayType(LongType))
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = child.nullable
-    override def nullSafeEval(a: Any): Any = minhashSigs(a.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.VectorExpressions.minhashSigs($a);")
-    override protected def withNewChildInternal(c: Expression): MinhashSigs =
-      copy(child = c)
-  }
-
-  /** fingerprint64(text) → bigint */
-  case class Fingerprint64(child: Expression)
-      extends UnaryExpression with ImplicitCastInputTypes {
-    override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(StringType)
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = child.nullable
-    override def nullSafeEval(t: Any): Any = fingerprint64(t.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, t =>
-        s"${ev.value} = graft.functions.VectorExpressions.fingerprint64($t);")
-    override protected def withNewChildInternal(c: Expression): Fingerprint64 =
-      copy(child = c)
-  }
-
-  /** quantize_i64(array<float>) → array<bigint> */
-  case class QuantizeI64(child: Expression)
-      extends UnaryExpression with ImplicitCastInputTypes {
-    override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(ArrayType(FloatType))
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = child.nullable
-    override def nullSafeEval(a: Any): Any = quantizeI64(a.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.VectorExpressions.quantizeI64($a);")
-    override protected def withNewChildInternal(c: Expression): QuantizeI64 =
-      copy(child = c)
-  }
-
-  /** simhash32(text) → bigint */
-  case class Simhash32(child: Expression)
-      extends UnaryExpression with ImplicitCastInputTypes {
-    override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.AbstractType] = Seq(StringType)
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = child.nullable
-    override def nullSafeEval(t: Any): Any = simhash32(t.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, t =>
-        s"${ev.value} = graft.functions.VectorExpressions.simhash32($t);")
-    override protected def withNewChildInternal(c: Expression): Simhash32 =
-      copy(child = c)
-  }
-
-  // ------------------------------------------------------------- Column API
-  import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpr}
-
-  def dot_i64(a: Column, b: Column): Column = toColumn(DotI64(toExpr(a), toExpr(b)))
-  def shingles3(text: Column): Column = toColumn(Shingles3(toExpr(text)))
-  def h31(arr: Column): Column = toColumn(H31(toExpr(arr)))
-  def minhash_sigs(sh: Column): Column = toColumn(MinhashSigs(toExpr(sh)))
-  def simhash32(text: Column): Column = toColumn(Simhash32(toExpr(text)))
-  def quantize_i64(a: Column): Column = toColumn(QuantizeI64(toExpr(a)))
-  def fingerprint64(text: Column): Column = toColumn(Fingerprint64(toExpr(text)))
-  def text_stats(text: Column): Column = toColumn(TextStats(toExpr(text)))
+  def dot_i64(a: Column, b: Column): Column = DotI64(a, b)
+  def shingles3(text: Column): Column = Shingles3(text)
+  def h31(arr: Column): Column = H31(arr)
+  def minhash_sigs(sh: Column): Column = MinhashSigs(sh)
+  def simhash32(text: Column): Column = Simhash32(text)
+  def quantize_i64(a: Column): Column = QuantizeI64(a)
+  def fingerprint64(text: Column): Column = Fingerprint64(text)
+  def text_stats(text: Column): Column = TextStats(text)
 }

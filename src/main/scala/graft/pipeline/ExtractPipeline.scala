@@ -156,9 +156,10 @@ object ExtractPipeline {
 
   /** Byte cost as a Catalyst column expression — evaluated on columnar scan
     * batches, so the mega/small routing decision never deserializes a row.
-    * Codegen'd native expression: the interpreted `aggregate(..., length)`
-    * HOF it replaces dominated the whole extraction stage (it runs on every
-    * input row: once in a commit's routed scan, in both branch scans of
+    * A static kernel call from generated code, on the `spans` column as
+    * read (no cast): the interpreted `aggregate(..., length)` HOF it
+    * replaces dominated the whole extraction stage (it runs on every input
+    * row: once in a commit's routed scan, in both branch scans of
     * [[extract]]). UTF-8 byte count vs [[docBytes]]'s UTF-16
     * char count only shifts WHICH side of the salting threshold a borderline
     * doc lands on — both paths produce identical merged output (salting

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * the same integers via one sqrt+div, bit-identical across engines), and
   * reported cosine values are floor(cos·10^6) — no rounding-mode hazards.
   *
-  * All dot products run through the codegen'd [[graft.functions.VectorExpressions.DotI64]]
-  * (~64 multiply-adds) instead of interpreted `zip_with`/`aggregate` HOFs
+  * All dot products run through the codegen'd `dot_i64`
+  * ([[graft.functions.VectorExpressions.dotI64]], ~64 multiply-adds) instead of interpreted `zip_with`/`aggregate` HOFs
   * (~430 µs/pair measured at round 1 — the single largest cost in the
   * round-1 bench).
   *

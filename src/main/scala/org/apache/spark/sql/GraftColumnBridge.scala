@@ -9,9 +9,4 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftColumnBridge {
   def toExpr(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
-
-  /** AbstractDataType is private[sql] in Spark 4; graft expressions need to
-    * name it to declare `inputTypes` (ExpectsInputTypes).
-    */
-  type AbstractType = org.apache.spark.sql.types.AbstractDataType
 }

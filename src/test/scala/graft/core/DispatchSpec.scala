@@ -64,4 +64,78 @@ class DispatchSpec extends AnyFunSuite {
     val ok = Extractor.extract("d1", Seq(Span("pdf", b64(pdf), "", 0)))
     assert(ok.failure == "" && ok.spans.nonEmpty)
   }
+
+  /** The standalone walk that told a `bin` zip's office kind before the
+    * kind came from the parse's own walk: the reference for that walk.
+    */
+  private def refZipExt(data: Array[Byte]): String = {
+    var hasWordDoc = false
+    var hasSlides = false
+    var mimetype = ""
+    val zin = new java.util.zip.ZipInputStream(new java.io.ByteArrayInputStream(data))
+    try {
+      var e = zin.getNextEntry
+      while (e != null) {
+        val n = e.getName
+        if (n == "word/document.xml") hasWordDoc = true
+        else if (n.startsWith("ppt/slides/")) hasSlides = true
+        else if (n == "mimetype") {
+          val buf = new Array[Byte](128)
+          val k = zin.read(buf)
+          if (k > 0) mimetype = new String(buf, 0, k, "US-ASCII").trim
+        }
+        zin.closeEntry()
+        e = zin.getNextEntry
+      }
+    } catch { case _: Exception => } finally zin.close()
+    if (hasWordDoc) "docx"
+    else if (hasSlides) "pptx"
+    else if (mimetype.contains("opendocument.presentation")) "odp"
+    else if (mimetype.contains("opendocument.text")) "odt"
+    else "odt"
+  }
+
+  private def zip(entries: (String, String)*): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.ZipOutputStream(bos)
+    entries.foreach { case (name, content) =>
+      z.putNextEntry(new java.util.zip.ZipEntry(name))
+      z.write(content.getBytes("UTF-8"))
+      z.closeEntry()
+    }
+    z.close()
+    bos.toByteArray
+  }
+
+  test("a bin zip's x-doctype, spans and failure code match the standalone kind walk") {
+    val odf = "content.xml" ->
+      "<office:document-content><office:body><text:p>Inhalt hier</text:p></office:body></office:document-content>"
+    // SynthCorpus docx/odt (classes 11-13), pptx/odp (14-16) re-tagged as
+    // bin, and the failure class 18
+    val synth = (0L until 120L).filter(id => Set(11, 12, 13, 14, 15, 16, 18)((id % 20).toInt))
+      .flatMap(id => graft.pipeline.SynthCorpus.mkDoc(id, 42L).spans)
+      .map(s => Base64.getDecoder.decode(s.text))
+    val made = Seq(
+      zip("ppt/slides/" -> "", odf), // the only slides entry is the directory
+      zip(odf, "ppt/slides/x.bin" -> "\u0001"),
+      zip("mimetype" -> "application/vnd.oasis.opendocument.presentation", odf),
+      zip("mimetype" -> "application/vnd.oasis.opendocument.text", odf),
+      zip("mimetype" -> "application/zip", odf),
+      zip("mimetype" -> "", odf))
+    val docx = synth.find(b => refZipExt(b) == "docx").get
+    val truncated = Seq(10, 40, docx.length / 2, docx.length - 30, docx.length - 1)
+      .map(java.util.Arrays.copyOf(docx, _))
+    val seen = (synth ++ made ++ truncated).map { payload =>
+      val got = binDoc(payload)
+      val kind = Extractor.sniff(payload)
+      val ref =
+        if (kind == "zip") Extractor.extract("d1", Seq(Span(refZipExt(payload), b64(payload), "", 0)))
+        else got // not a zip: the kind walk never ran
+      assert((got.failure, got.metadata, got.spans) == (ref.failure, ref.metadata, ref.spans))
+      (got.metadata.getOrElse("x-doctype", ""), got.failure)
+    }.toSet
+    // every kind and the zip failure codes were reached
+    Seq("docx", "pptx", "odt", "odp").foreach(k => assert(seen.contains((k, "")), k))
+    Seq("content_not_found", "parse_error").foreach(f => assert(seen.exists(_._2 == f), f))
+  }
 }

@@ -27,7 +27,7 @@ class ZipArchiveSpec extends AnyFunSuite {
     // early guard falsely rejected as limit_exceeded — the reference accepts
     // entries up to exactly 50 MiB
     val size = 40 * 1024 * 1024
-    val out = ZipArchive.entries(zipWith("big.xml", size, 'x'.toByte), _ => true)
+    val out = ZipArchive.read(zipWith("big.xml", size, 'x'.toByte), _ => true).entries
     assert(out.size == 1)
     assert(out.head.data.length == size)
     assert(out.head.data(0) == 'x'.toByte && out.head.data(size - 1) == 'x'.toByte)
@@ -36,7 +36,7 @@ class ZipArchiveSpec extends AnyFunSuite {
   test("entries over the 50 MiB cap are rejected") {
     val size = ZipArchive.MaxEntryBytes + 1024
     assertThrows[ZipArchive.EntryTooBigException] {
-      ZipArchive.entries(zipWith("huge.xml", size, 'y'.toByte), _ => true)
+      ZipArchive.read(zipWith("huge.xml", size, 'y'.toByte), _ => true).entries
     }
   }
 
@@ -44,8 +44,8 @@ class ZipArchiveSpec extends AnyFunSuite {
     // the per-thread scratch shrinks back after oversized reads; a
     // subsequent normal read must be unaffected
     val big = zipWith("big.xml", 33 * 1024 * 1024, 'a'.toByte)
-    ZipArchive.entries(big, _ => true)
-    val small = ZipArchive.entries(zipWith("s.xml", 1234, 'b'.toByte), _ => true)
+    ZipArchive.read(big, _ => true).entries
+    val small = ZipArchive.read(zipWith("s.xml", 1234, 'b'.toByte), _ => true).entries
     assert(small.head.data.length == 1234)
     assert(small.head.data.forall(_ == 'b'.toByte))
   }

@@ -6,15 +6,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class SpanExpressionsSpec extends AnyFunSuite {
 
+  // a new session, so its extensions apply even when another suite's
+  // session is already the default
   private lazy val spark = SparkSession.builder()
     .master("local[2]")
+    .withExtensions(new GraftExtensions())
     .config("spark.sql.shuffle.partitions", "2")
     .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    .create()
 
   test("dehyphenate expression matches the kernel, in codegen and SQL") {
     import spark.implicits._
-    SpanExpressions.register(spark)
     val df = Seq("Stra-\nße\n", "EU-\nInstitution\n", "E-\nMail\n", "plain\n")
       .toDF("t")
     val viaColumn = df.select(SpanExpressions.dehyphenate(col("t"), lit(false)).as("d"))
@@ -28,7 +30,8 @@ class SpanExpressionsSpec extends AnyFunSuite {
     val plan = spark.range(3)
       .select(SpanExpressions.dehyphenate(col("id").cast("string"), lit(true)))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("*(1) Project [dehyphenate("), plan) // '*' = codegen'd stage
+    // '*' = codegen'd stage, calling the kernel's static method
+    assert(plan.contains("*(1) Project [static_invoke(graft.functions.SpanExpressions.dehyphenateUTF8("), plan)
   }
 
   test("span_stats matches the typed envelope fold, incl. UTF-16 surrogate lengths") {
@@ -69,7 +72,6 @@ class SpanExpressionsSpec extends AnyFunSuite {
 
   test("strip_boilerplate expression") {
     import spark.implicits._
-    SpanExpressions.register(spark)
     val html = """<body><nav><a href="/">Home</a> <a href="/b">B</a> <a href="/c">C</a></nav><p>Der lange Inhalt dieses Absatzes bleibt erhalten weil er genug Wörter enthält.</p></body>"""
     val out = Seq(html).toDF("h")
       .select(SpanExpressions.strip_boilerplate(col("h"))).as[String].head()

@@ -2,7 +2,9 @@ package graft.pipeline
 
 import graft.core.Extractor
 import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.execution.{AppendColumnsWithObjectExec, FileSourceScanExec, MapGroupsExec, QueryExecution, SerializeFromObjectExec, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.execution.{AppendColumnsWithObjectExec, FileSourceScanExec, InputAdapter, MapGroupsExec, QueryExecution, SerializeFromObjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ExchangeQueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
@@ -354,6 +356,27 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(ops.count(_.isInstanceOf[SerializeFromObjectExec]) == 1, s"serializers: ${ops.map(_.nodeName)}")
   }
 
+  /** The routed scan in `write` calls the byte-cost kernel from generated
+    * code on the parquet `spans` column as read: a Cast over `spans` would
+    * copy every span array of every row.
+    */
+  private def assertRoutedInCodegen(write: SparkPlan): Unit = {
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(stage)
+    }
+    val args = collect(write) { case w: WholeStageCodegenExec => w }
+      .flatMap(w => stage(w.child)).flatMap(_.expressions)
+      .flatMap(_.collect { case s: StaticInvoke if s.functionName == "spanByteCost" => s.arguments })
+    assert(args.nonEmpty, "spanByteCost is not called from generated code")
+    assert(args.flatten.forall { case a: AttributeReference => a.name == "spans"; case _ => false },
+      s"spanByteCost arguments: $args")
+    val casts = collect(write) { case p => p.expressions }.flatten.flatMap(_.collect {
+      case c: Cast if c.child.references.exists(_.name == "spans") => c
+    })
+    assert(casts.isEmpty, s"casts over spans: $casts")
+  }
+
   /** `d` has the failure, spans and bytes of its synthetic doc's per-doc
     * extraction.
     */
@@ -383,6 +406,7 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(plans.map(scansOf(input)).sum == 1, "the input is scanned more than once")
     assert(!has(writes.head)(saltedChain), "salted chain in the plan")
     assertOneSerializer(writes.head)
+    assertRoutedInCodegen(writes.head)
     assertCommittedReference(root, 60L)
   }
 
