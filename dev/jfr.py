@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Allocation shares from a JDK Flight Recorder recording.
 
-    python3 dev/jfr.py <recording.jfr> <frame> [<frame> ...] [--under <frame>] [--window <from> <to>]
+    python3 dev/jfr.py <recording.jfr> [<frame> ...] [--under <frame>] [--window <from> <to>] [--layers]
 
 Reads the recording's `jdk.ObjectAllocationSample` events through the JDK's
 `jfr print` and sums their weights (the bytes a thread allocated since its
@@ -14,6 +14,14 @@ when its phases end in those seconds ("set up and warmed up", "timed passes
 done"), so the window of the timed passes can be read from it. Then it
 prints the 10 frames that allocate the most weight themselves (the top
 frame of each stack).
+
+With `--layers` it first splits the weight across the pipeline's layers
+(`LAYERS`): each sample goes to the layer of the first frame, from the
+allocating one down, that matches one of the layer's patterns, and a sample
+no frame matches goes to "driver/other". A pattern ending in `.` is a
+package prefix; any other is a prefix of the frame's `SimpleClass.method`
+(`GeneratedClass` matches every generated iterator class,
+`ExtractPipeline$.extractDoc` that one method).
 
 A frame is `Class.method` or `Class`, with the class named as far as
 needed: `SerializableConfiguration.readObject` matches
@@ -30,12 +38,26 @@ JVM the run starts); a deep stack depth keeps task frames such as
       -XX:FlightRecorderOptions=stackdepth=256" \\
       python3 perfbench/run.py --workload extract_mixed --seed 1 --seconds 10 --trace 0
     python3 dev/jfr.py /tmp/run.jfr SerializableConfiguration.readObject --under ResultTask.runTask
+    python3 dev/jfr.py /tmp/run.jfr TorrentBroadcast.blockifyObject --layers --window 20 45
     grep "since JVM start" .bench_build/perfbench/extract_mixed-1.log
 """
 import argparse
 import subprocess
 import sys
 from collections import Counter
+
+LAYERS = [
+    ("kernel", ("graft.core.",)),
+    ("fold", ("MetricsFold", "ExtractPipeline$.extractDoc")),
+    ("parquet write", ("ParquetWriteSupport", "InternalParquetRecordWriter", "ColumnChunkPageWriteStore",
+                       "CodecFactory")),
+    ("parquet read", ("VectorizedParquetRecordReader", "ParquetFileReader")),
+    ("conf decode", ("SerializableConfiguration.readObject",)),
+    ("codegen", ("org.codehaus.janino.", "CodeGenerator")),
+    ("task deserialization", ("JavaSerializerInstance.deserialize",)),
+    ("generated code", ("GeneratedClass",)),
+]
+OTHER = "driver/other"
 
 UNITS = {"byte": 1, "bytes": 1, "B": 1, "kB": 1 << 10, "KB": 1 << 10, "MB": 1 << 20, "GB": 1 << 30, "TB": 1 << 40}
 
@@ -87,23 +109,40 @@ def samples(path):
 def matches(frame, name):
     """Whether `frame` (`pkg.Class.method`) is `name`'s method, or a method of
     `name`'s class (a Scala object's `Class$` included)."""
-    cls = frame.rsplit(".", 1)[0].removesuffix("$")
-    return any(s == name or s.endswith("." + name) for s in (frame, cls))
+    cls, _, method = frame.rpartition(".")
+    cls = cls.removesuffix("$")
+    return any(s == name or s.endswith("." + name) for s in (frame, f"{cls}.{method}", cls))
+
+
+def layer_of(frames):
+    """The first of `LAYERS` that a frame, from the allocating one down,
+    matches; else `OTHER`."""
+    for frame in frames:
+        cls, _, method = frame.rpartition(".")
+        key = cls.rsplit(".", 1)[-1] + "." + method
+        for name, patterns in LAYERS:
+            if any(frame.startswith(p) if p.endswith(".") else key.startswith(p) for p in patterns):
+                return name
+    return OTHER
 
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("recording")
-    ap.add_argument("frames", nargs="+", metavar="frame")
+    ap.add_argument("frames", nargs="*", metavar="frame")
     ap.add_argument("--under", help="count only stacks that hold this frame below the one asked for")
     ap.add_argument("--window", nargs=2, type=float, metavar=("FROM", "TO"),
                     help="count only samples taken in these seconds after the JVM started")
+    ap.add_argument("--layers", action="store_true", help="split the weight across the pipeline's layers")
     a = ap.parse_args()
+    if not a.frames and not a.layers:
+        ap.error("name a frame, or ask for --layers")
 
     start = jvm_start_s(a.recording) if a.window else 0.0
     total, count = 0.0, 0
     held = Counter()
     alloc = Counter()
+    layers = Counter()
     for at, weight, frames in samples(a.recording):
         # a recording that passes midnight wraps the time of day
         if a.window and not a.window[0] <= (at - start) % 86400 <= a.window[1]:
@@ -112,6 +151,8 @@ def main():
         count += 1
         if frames:
             alloc[frames[0]] += weight
+        if a.layers:
+            layers[layer_of(frames)] += weight
         for name in a.frames:
             at = next((i for i, f in enumerate(frames) if matches(f, name)), None)
             if at is not None and (a.under is None or any(matches(f, a.under) for f in frames[at + 1:])):
@@ -120,7 +161,12 @@ def main():
         sys.exit(f"jfr.py: no jdk.ObjectAllocationSample events in {a.recording}")
 
     mib = 1 << 20
-    print(f"{count} samples, {total / mib:.1f} MiB sampled weight")
+    window = f" from {a.window[0]:g} s to {a.window[1]:g} s" if a.window else ""
+    print(f"{count} samples, {total / mib:.1f} MiB sampled weight{window}")
+    if a.layers:
+        print("by layer:")
+        for name in [n for n, _ in LAYERS] + [OTHER]:
+            print(f"{layers[name] / total:7.2%} {layers[name] / mib:10.1f} MiB  {name}")
     for name in a.frames:
         where = f" under {a.under}" if a.under else ""
         print(f"{held[name] / total:7.2%} {held[name] / mib:10.1f} MiB  {name}{where}")

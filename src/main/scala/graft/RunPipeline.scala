@@ -10,10 +10,12 @@ import org.apache.spark.sql.{Encoders, SparkSession}
   *
   * Reads the interleaved-span table (BASELINE.json input_hint schema),
   * resumes from the lineage root's last committed snapshot, extracts, and
-  * commits output/metrics/manifest atomically ([[Lineage.run]]: one job
-  * that scans the input once, plus a salted job only when some doc is
-  * mega). The session is a plain one: nothing on this path resolves a SQL
-  * function by name, so it installs no extension. `numPartitions`
+  * commits atomically. A commit ([[Lineage.run]]) = output write(s), two
+  * driver-written tables, marker: one job scans the input once, a salted
+  * job follows only when some doc is mega, and the driver writes the
+  * metrics and manifest tables from what those jobs folded, with no
+  * further job. The session is a plain one: nothing on this path resolves
+  * a SQL function by name, so it installs no extension. `numPartitions`
   * (default 32) sets `spark.sql.shuffle.partitions`: the starting width of
   * the salted spread shuffle, which AQE coalesces. The one-line JSON run
   * summary ([[summaryLine]]) is made from the metrics rows the commit

@@ -5,7 +5,9 @@ import java.util.zip.ZipInputStream
 
 /** Minimal in-memory zip reader for office containers (reference:
   * pkg/officexmlparser/office_parser.go:60-131). Uses the JDK inflater;
-  * enforces the reference's 50 MiB per-entry cap (office_parser.go:125-127).
+  * enforces the reference's 50 MiB per-entry cap (office_parser.go:125-127)
+  * on the selected entries' sum, so an archive hands the parser at most
+  * 50 MiB however many entries it selects.
   */
 object ZipArchive {
 
@@ -14,7 +16,7 @@ object ZipArchive {
   val MaxEntryBytes: Int = 50 * 1024 * 1024
 
   final class EntryTooBigException(name: String)
-    extends RuntimeException(s"zip entry '$name' exceeds 50 MiB")
+    extends RuntimeException(s"zip entries up to '$name' exceed 50 MiB")
 
   /** One walk over an archive: the entries `select` picked, in stream
     * (local header) order; the name of every entry, directories included;
@@ -29,6 +31,7 @@ object ZipArchive {
     val out = Vector.newBuilder[Entry]
     val names = Vector.newBuilder[String]
     var mimetype = ""
+    var selected = 0
     try {
       var e = zin.getNextEntry
       while (e != null) {
@@ -39,7 +42,9 @@ object ZipArchive {
           val k = zin.read(buf)
           if (k > 0) mimetype = new String(buf, 0, k, java.nio.charset.StandardCharsets.US_ASCII)
         } else if (!e.isDirectory && select(n)) {
-          out += Entry(n, readCapped(zin, n))
+          val entry = Entry(n, readCapped(zin, n, MaxEntryBytes - selected))
+          selected += entry.data.length
+          out += entry
         }
         zin.closeEntry()
         e = zin.getNextEntry
@@ -59,7 +64,8 @@ object ZipArchive {
   private val scratchTL: ThreadLocal[Scratch] =
     ThreadLocal.withInitial(() => new Scratch)
 
-  private def readCapped(zin: ZipInputStream, name: String): Array[Byte] = {
+  /** The current entry's bytes; throws once they pass `cap`. */
+  private def readCapped(zin: ZipInputStream, name: String, cap: Int): Array[Byte] = {
     val s = scratchTL.get()
     try {
       var len = 0
@@ -70,13 +76,13 @@ object ZipArchive {
           // doubling from 32 MiB jumps straight past 50 MiB, which would
           // falsely reject valid 32-50 MiB entries the cap is meant to allow
           val grown = math.min(
-            math.max(s.acc.length * 2L, len + n.toLong), MaxEntryBytes + 8192L)
+            math.max(s.acc.length * 2L, len + n.toLong), cap + 8192L)
           if (len + n.toLong > grown) throw new EntryTooBigException(name)
           s.acc = java.util.Arrays.copyOf(s.acc, grown.toInt)
         }
         System.arraycopy(s.chunk, 0, s.acc, len, n)
         len += n
-        if (len > MaxEntryBytes) throw new EntryTooBigException(name)
+        if (len > cap) throw new EntryTooBigException(name)
         n = zin.read(s.chunk)
       }
       java.util.Arrays.copyOf(s.acc, len)

@@ -34,7 +34,7 @@ import scala.collection.mutable
   * Both jobs pass each output row through the commit's [[MetricsFold]]
   * where the row is made (the unsalted kernel and the salted merge), so the
   * output write serializes each row once and the run's per-partition
-  * metrics rows come back to the driver with the writes.
+  * metrics rows and clean doc ids come back to the driver with the writes.
   *
   * The whole per-document kernel ([[graft.core.Extractor]]) runs inside a
   * single typed transform — spans never explode into per-span rows, so the
@@ -275,8 +275,8 @@ private[pipeline] final class PartitionFold(runId: String, partitionId: Int) {
 
 /** Tallies the rows passed through it into one [[PartitionMetrics]] row per
   * task, keyed by the task's partition id (moved up by [[after]]), and adds
-  * that row to `rows` when the task completes. A task that passes no row
-  * adds none.
+  * that row, with the ids of the task's clean docs (`failure == ""`), to
+  * `rows` when the task completes. A task that passes no row adds none.
   *
   * Each task deserializes its own copy of the fold, so `open` is task-local;
   * it is made on the task's first row. Exact when the fold runs in the
@@ -286,18 +286,21 @@ private[pipeline] final class PartitionFold(runId: String, partitionId: Int) {
   * attempts. (`Dataset.observe` would give one global aggregate; the
   * metrics table has a row per partition.)
   */
-final class MetricsFold private[pipeline] (runId: String, rows: CollectionAccumulator[PartitionMetrics],
+final class MetricsFold private[pipeline] (runId: String,
+    rows: CollectionAccumulator[(PartitionMetrics, Array[String])],
     firstPartition: Int = 0) extends (ExtractedDoc => ExtractedDoc) with Serializable {
   @transient private var open: PartitionFold = _
+  @transient private var clean: mutable.ArrayBuilder[String] = _
 
   def apply(d: ExtractedDoc): ExtractedDoc = {
     if (open == null) {
       val task = TaskContext.get()
-      val tally = new PartitionFold(runId, firstPartition + task.partitionId())
-      task.addTaskCompletionListener[Unit](_ => tally.row.foreach(rows.add))
-      open = tally
+      val (tally, ids) = (new PartitionFold(runId, firstPartition + task.partitionId()), Array.newBuilder[String])
+      task.addTaskCompletionListener[Unit](_ => tally.row.foreach(r => rows.add((r, ids.result()))))
+      open = tally; clean = ids
     }
     open.add(d.failure, d.bytes, d.spans.size)
+    if (d.failure.isEmpty) clean += d.doc_id
     d
   }
 

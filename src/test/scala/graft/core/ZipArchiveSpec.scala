@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.pipeline.Span
 import java.io.ByteArrayOutputStream
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,6 +39,41 @@ class ZipArchiveSpec extends AnyFunSuite {
     assertThrows[ZipArchive.EntryTooBigException] {
       ZipArchive.read(zipWith("huge.xml", size, 'y'.toByte), _ => true).entries
     }
+  }
+
+  /** A pptx of `slides` slides, each `<a:t>slide i</a:t>` padded with
+    * spaces to `slideBytes` bytes.
+    */
+  private def paddedPptx(slides: Int, slideBytes: Int): String = {
+    val bos = new ByteArrayOutputStream()
+    val z = new ZipOutputStream(bos)
+    val pad = Array.fill[Byte](1 << 16)(' '.toByte)
+    for (i <- 1 to slides) {
+      val head = s"<p:sld><p:cSld><a:t>slide $i</a:t></p:cSld>".getBytes("UTF-8")
+      val tail = "</p:sld>".getBytes("UTF-8")
+      z.putNextEntry(new ZipEntry(s"ppt/slides/slide$i.xml"))
+      z.write(head)
+      var written = head.length + tail.length
+      while (written < slideBytes) {
+        val n = math.min(pad.length, slideBytes - written)
+        z.write(pad, 0, n)
+        written += n
+      }
+      z.write(tail)
+      z.closeEntry()
+    }
+    z.close()
+    java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
+  }
+
+  test("the selected entries of one archive share the 50 MiB cap") {
+    val slide = 20 * 1024 * 1024
+    val three = Extractor.extract("d3", Seq(Span("pptx", paddedPptx(3, slide), "", 0)))
+    assert(three.failure == "limit_exceeded")
+    val two = Extractor.extract("d2", Seq(Span("pptx", paddedPptx(2, slide), "", 0)))
+    assert(two.failure == "")
+    val text = two.spans.map(_.text).mkString
+    assert(text.contains("slide 1") && text.contains("slide 2"), text.take(200))
   }
 
   test("small entries still read correctly after a near-cap entry on the same thread") {

@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSpar
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_COL}
+import org.apache.spark.sql.types.{DataType, MapType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
@@ -268,6 +269,73 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(store.runMetrics(spark, "r2").count() == 0)
   }
 
+  /** `t` with every field and map value nullable. */
+  private def nullable(t: DataType): DataType = t match {
+    case st: StructType => StructType(st.fields.map(f => StructField(f.name, nullable(f.dataType))))
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  test("driver-written tables read as Spark-written ones: inferred schemas, and beside a Spark-written run") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("lineage")
+    val store = new ParquetSnapshotStore(root.toString)
+    // run r0 written the way earlier commits wrote it: Spark's parquet writer
+    val oldIds = (0L until 10L).map(i => s"doc$i")
+    val oldMetrics = Seq(PartitionMetrics("r0", 0, 6L, 600L, 12L, Map.empty),
+      PartitionMetrics("r0", 1, 4L, 400L, 8L, Map("parse_error" -> 1L)))
+    spark.createDataset(oldMetrics).coalesce(1).write.parquet(s"$root/metrics/run=r0")
+    oldIds.toDF("doc_id").write.parquet(s"$root/manifest/run=r0")
+    Files.createDirectories(root.resolve("_commits"))
+    Files.createFile(root.resolve("_commits").resolve("r0"))
+
+    val returned = Lineage.run(mixedCorpus, store, "r1", mixedCfg)
+    // the gate's way: no schema given
+    assert(spark.read.parquet(s"$root/manifest/run=r1").schema == StructType(Seq(StructField("doc_id", StringType))))
+    assert(nullable(spark.read.parquet(s"$root/metrics/run=r1").schema) ==
+      nullable(Encoders.product[PartitionMetrics].schema))
+    val out = spark.read.parquet(s"$root/output/run=r1").as[ExtractedDoc].collect()
+    assert(out.map(_.doc_id).intersect(oldIds).isEmpty, "r1 extracted a doc r0 committed")
+    val clean = out.filter(_.failure.isEmpty).map(_.doc_id).toSeq
+    assert(out.exists(_.failure.nonEmpty) && clean.nonEmpty)
+    val ids = store.committedDocIds(spark)
+    assert(collect(ids.queryExecution.executedPlan) { case s: FileSourceScanExec => s }.length == 1)
+    assert(ids.collect().sorted.toSeq == (oldIds ++ clean).sorted)
+    val both = Seq("r0", "r1").map(r => s"$root/manifest/run=$r")
+    assert(spark.read.parquet(both: _*).select("doc_id").as[String].collect().sorted.toSeq == (oldIds ++ clean).sorted)
+    assert(store.runMetrics(spark, "r0").collect().sortBy(_.partition_id).toSeq == oldMetrics)
+    assert(store.runMetrics(spark, "r1").collect().sortBy(_.partition_id).toSeq == returned)
+    assert(returned.exists(_.failures.isEmpty) && returned.exists(_.failures.nonEmpty))
+  }
+
+  test("a recommit replaces what a crashed commit left in the metrics and manifest tables") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("lineage")
+    val store = new ParquetSnapshotStore(root.toString)
+    val corpus = SynthCorpus.generate(spark, 40L, seed = 42L, partitions = 4)
+    Lineage.run(corpus.filter(d => d.doc_id.drop(3).toLong < 10), store, "r1", mixedCfg)
+    // a crash after the tail writes and before the marker: a manifest file
+    // holding a foreign id, and a stray metrics file
+    def plant(ds: org.apache.spark.sql.Dataset[_], table: String): Unit = {
+      val written = Files.createTempDirectory("planted").resolve("t")
+      ds.coalesce(1).write.parquet(written.toString)
+      val part = Files.list(written).iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+      val dir = Files.createDirectories(root.resolve(table).resolve("run=r2"))
+      Files.move(part, dir.resolve("part-99999.parquet"))
+    }
+    plant(Seq("foreign").toDF("doc_id"), "manifest")
+    plant(spark.createDataset(Seq(PartitionMetrics("r2", 99, 1L, 1L, 1L, Map.empty))), "metrics")
+    assert(store.committedRuns == Seq("r1"))
+
+    val returned = Lineage.run(corpus, store, "r2", mixedCfg)
+    val out = spark.read.parquet(s"$root/output/run=r2").as[ExtractedDoc].collect()
+    val manifest = spark.read.parquet(s"$root/manifest/run=r2").as[String].collect().sorted.toSeq
+    assert(manifest == out.filter(_.failure.isEmpty).map(_.doc_id).sorted.toSeq)
+    assert(store.runMetrics(spark, "r2").collect().sortBy(_.partition_id).toSeq == returned)
+    assert(returned.map(_.docs).sum == out.length)
+    assert(!store.committedDocIds(spark).collect().contains("foreign"))
+  }
+
   test("commitRun refuses a committed run id and still commits a crashed one") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("lineage").toString
@@ -328,20 +396,32 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val input = Files.createTempDirectory("docs").resolve("t").toString
     SynthCorpus.generate(spark, n, seed = 42L, partitions = 8).write.parquet(input)
     val root = Files.createTempDirectory("lineage").toString
-    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val executions = new ConcurrentLinkedQueue[QueryExecution]
     val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe.executedPlan)
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = executions.add(qe)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
+    val end = spark.range(1)
     try {
       val corpus = spark.read.parquet(input).as[Doc](Encoders.product[Doc])
       Lineage.run(corpus, new ParquetSnapshotStore(root), "r1", cfg)
-      // listeners hear of executions asynchronously, in order; the manifest
-      // write is the commit's last
-      eventually(timeout(30.seconds)) { assert(plans.asScala.exists(writesTo(root, "manifest"))) }
+      // listeners hear of executions asynchronously, in order: once they
+      // hear of one run after the commit, they have heard of all the commit's
+      end.collect()
+      eventually(timeout(30.seconds)) { assert(executions.asScala.exists(_ eq end.queryExecution)) }
     } finally spark.listenerManager.unregister(listener)
-    (input, root, plans.asScala.toSeq)
+    (input, root, executions.asScala.toSeq.takeWhile(_ ne end.queryExecution).map(_.executedPlan))
+  }
+
+  /** A commit is its output write(s): no SQL execution of the commit
+    * writes the metrics or the manifest table.
+    */
+  private def assertOnlyOutputWrites(root: String, plans: Seq[SparkPlan], writes: Int): Unit = {
+    assert(plans.length == writes, s"expected $writes SQL executions, got ${plans.length}")
+    assert(plans.count(writesTo(root, "output")) == writes)
+    assert(!plans.exists(writesTo(root, "metrics")), "a plan writes the metrics table")
+    assert(!plans.exists(writesTo(root, "manifest")), "a plan writes the manifest table")
   }
 
   /** Each output row is serialized once: the result stage of an output
@@ -401,8 +481,8 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("no mega-doc: the run reads its input once, in one output write without the salted chain") {
     val (input, root, plans) = commitAndPlans(60L, ExtractPipeline.PipelineConfig())
+    assertOnlyOutputWrites(root, plans, 1)
     val writes = plans.filter(writesTo(root, "output"))
-    assert(writes.length == 1, "expected one output write")
     assert(plans.map(scansOf(input)).sum == 1, "the input is scanned more than once")
     assert(!has(writes.head)(saltedChain), "salted chain in the plan")
     assertOneSerializer(writes.head)
@@ -412,8 +492,8 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("mega-docs: a second output write salts them, and the output equals the per-doc reference") {
     val (_, root, plans) = commitAndPlans(40L, ExtractPipeline.PipelineConfig(megaDocBytes = 2048))
+    assertOnlyOutputWrites(root, plans, 2)
     val writes = plans.filter(writesTo(root, "output"))
-    assert(writes.length == 2, "expected an unsalted and a salted output write")
     writes.foreach(assertOneSerializer)
     assert(!has(writes.head)(saltedChain), "salted chain in the unsalted write")
     // the spread is sized by AQE: a repartition by columns, read coalesced
