@@ -9,10 +9,14 @@ order the applications started. An application's log is one file, or,
 when Spark rolls its logs (the default since Spark 4.0), one
 `eventlog_v2_<app id>` directory of `events_<n>_<app id>` files. For each
 application it prints the SQL executions, jobs, stages run and skipped,
-and tasks, then one line per stage attempt run: its task count, and the
-summed and the longest task run time (executor run time) in seconds. A
-stage is skipped when a job lists it but it never ran (its shuffle output
-was already there).
+and tasks, then one line per stage attempt run: its task count, its wall
+time (submission to completion), the summed and the longest task run
+time (executor run time) in seconds, and what it ran. A stage of a SQL
+execution is named by the plan operators that made its RDDs (the scope
+names of its RDDs, e.g. `Scan parquet, WholeStageCodegen (1), Exchange`),
+since every such stage has the same call site; a stage outside any scope
+by its call site. A stage is skipped when a job lists it but it never ran
+(its shuffle output was already there).
 """
 import argparse
 import json
@@ -40,6 +44,21 @@ def events(path):
                         pass  # a log cut short by a crash ends in a partial line
 
 
+def operators(info):
+    """The scope names of a stage's RDDs, in RDD order, each once: the plan
+    operators that made them. Empty for a stage outside any scope."""
+    names = []
+    for rdd in sorted(info.get("RDD Info", []), key=lambda r: r.get("RDD ID", 0)):
+        try:
+            name = json.loads(rdd.get("Scope") or "{}").get("name", "")
+        except json.JSONDecodeError:
+            continue
+        name = name.strip()
+        if name and name not in names:
+            names.append(name)
+    return ", ".join(names)
+
+
 def application(path):
     app = {"name": path.name, "id": path.name, "start": 0, "sql": set(), "jobs": set(),
            "listed": set(), "stages": {}, "tasks": 0}
@@ -57,7 +76,8 @@ def application(path):
             info = e["Stage Info"]
             key = (info["Stage ID"], info.get("Stage Attempt ID", 0))
             stage = app["stages"].setdefault(key, {"tasks": 0, "run_ms": 0, "max_ms": 0})
-            stage["name"] = info.get("Stage Name", "")
+            stage["name"] = operators(info) or info.get("Stage Name", "").split("\n")[0]
+            stage["wall_ms"] = info.get("Completion Time", 0) - info.get("Submission Time", 0)
         elif kind == "SparkListenerTaskEnd":
             key = (e["Stage ID"], e.get("Stage Attempt ID", 0))
             stage = app["stages"].setdefault(key, {"name": "", "tasks": 0, "run_ms": 0, "max_ms": 0})
@@ -74,9 +94,8 @@ def report(app):
     print(f"{app['name']} ({app['id']}): {len(app['sql'])} SQL executions, {len(app['jobs'])} jobs, "
           f"{len(app['stages'])} stages run, {len(app['listed'] - ran)} skipped, {app['tasks']} tasks")
     for (stage_id, attempt), s in sorted(app["stages"].items()):
-        name = s["name"].split("\n")[0]
-        print(f"  stage {stage_id}.{attempt}: {s['tasks']:4d} tasks {s['run_ms'] / 1e3:8.3f} task-s "
-              f"max {s['max_ms'] / 1e3:7.3f} s  {name}")
+        print(f"  stage {stage_id}.{attempt}: {s['tasks']:4d} tasks {s.get('wall_ms', 0) / 1e3:7.3f} s wall "
+              f"{s['run_ms'] / 1e3:8.3f} task-s max {s['max_ms'] / 1e3:7.3f} s  {s['name']}")
 
 
 def main():

@@ -131,7 +131,7 @@ object Extractor {
     // page text when the page text is short.
     var pendingOcr: List[String] = Nil
 
-    val arr = spans.sortBy(_.offset)
+    val arr = inOffsetOrder(spans)
     var i = 0
     while (i < arr.length && failure.isEmpty) {
       val s = arr(i)
@@ -245,6 +245,19 @@ object Extractor {
 
     if (failure.nonEmpty) Result(Vector.empty, Map.empty, failure)
     else Result(out.result(), metadata, "", pendingHyphen)
+  }
+
+  private val ByOffset: java.util.Comparator[Span] = (a, b) => Integer.compare(a.offset, b.offset)
+
+  /** `spans` stably sorted by offset, indexed: one array, sorted in place.
+    * `Seq.sortBy` keeps a `List` a `List` (the encoders decode `Seq[Span]`
+    * as one), and indexing that in a loop over the spans is quadratic.
+    */
+  private[graft] def inOffsetOrder(spans: Seq[Span]): IndexedSeq[Span] = {
+    val arr = new Array[Span](spans.length)
+    spans.copyToArray(arr)
+    java.util.Arrays.sort(arr, ByOffset)
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)
   }
 
   private[graft] def decodePayload(text: String): Array[Byte] =

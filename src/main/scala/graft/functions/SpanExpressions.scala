@@ -86,7 +86,7 @@ object SpanExpressions {
     * read fields by ordinal, so a span array of any other shape must be an
     * analysis error, not a garbage read on UnsafeArrayData.
     */
-  private val SpanArray =
+  private[graft] val SpanArray =
     ArrayType(StructType.fromDDL("kind string, text string, media_ref string, offset int"))
 
   /** dehyphenate(text, removeNewlines) — the T1/T2 kernel as a SQL scalar. */

@@ -11,17 +11,20 @@ import scala.collection.mutable
   *
   *   input Dataset[Doc]
   *     → resume anti-join against the committed manifest   (S2/S6 analog)
-  *     → small docs: kernel → ExtractedDoc                  (fused narrow stage)
-  *     → mega-docs: split into contiguous span chunks by bytes  (S9 analog)
+  *     → small docs: kernel → ExtractedDoc                  (fused narrow stage, objects)
+  *     → mega-docs, on rows up to the merge:
+  *         → span_chunks: contiguous span chunks by bytes   (S9 analog; explode)
   *         → repartition(hash(doc_id, salt))                (spread shuffle)
-  *         → map(extract)
-  *         → regroup chunks by doc_id                       (regroup shuffle)
-  *         → merge, replaying cross-chunk dehyphenator state
+  *         → extract_chunk: the kernel per chunk
+  *         → repartition(hash(doc_id)), sorted by doc_id    (regroup shuffle)
+  *         → objects: merge, replaying cross-chunk dehyphenator state
   *         → ExtractedDoc
   *
-  * Rows and the kernel share one span type ([[Span]]): a doc's spans go
-  * into [[graft.core.Extractor.extract]] and its result spans into the
-  * output row without a copy.
+  * Typed rows and the kernel share one span type ([[Span]]): a small doc's
+  * spans go into [[graft.core.Extractor.extract]] and its result spans
+  * into the output row without a copy. The salted branch's kernels
+  * ([[SaltedRows]]) read and write span structs, so a mega-doc's chunks are
+  * decoded into objects once, after the regroup.
   *
   * [[extract]] is the stage as one Dataset, the union of both branches,
   * each over its own scan of the input. A commit ([[Lineage.run]]) runs
@@ -36,10 +39,10 @@ import scala.collection.mutable
   * output write serializes each row once and the run's per-partition
   * metrics rows and clean doc ids come back to the driver with the writes.
   *
-  * The whole per-document kernel ([[graft.core.Extractor]]) runs inside a
-  * single typed transform — spans never explode into per-span rows, so the
-  * only wide operations are the anti-join and the salted branch's two
-  * shuffles (spread and regroup), which touch only the mega-doc minority.
+  * The whole per-document kernel ([[graft.core.Extractor]]) runs once per
+  * doc or chunk — spans never explode into per-span rows, so the only wide
+  * operations are the anti-join and the salted branch's two shuffles
+  * (spread and regroup), which touch only the mega-doc minority.
   */
 object ExtractPipeline {
 
@@ -66,43 +69,55 @@ object ExtractPipeline {
       spans: Seq[Span], metadata: Map[String, String], failure: String,
       bytes: Long, pendingOut: Int)
 
-  def docBytes(spans: Seq[Span]): Long =
-    spans.iterator.map(s => s.text.length.toLong + s.media_ref.length).sum
+  def docBytes(spans: Seq[Span]): Long = spans.iterator.map(spanBytes).sum
+
+  private def spanBytes(s: Span): Long = s.text.length.toLong + s.media_ref.length
 
   /** Split a mega-doc's spans into ≤ [[SaltBuckets]] contiguous chunks of
-    * roughly equal byte cost. Only multi-span docs split (a single binary
-    * payload parses atomically); chunk boundaries fall between spans, and
-    * never while an OCR transcript is pending (a media span with a recorded
-    * transcript must stay in the same chunk as the text span that decides
-    * the <200-char trigger, misc.go:38-40), so each chunk is a valid
-    * sub-document and merge reproduces the unsalted output exactly.
+    * roughly equal byte cost ([[chunkEnds]]). The row path splits with the
+    * same rule ([[SaltedRows.spanChunks]]).
     */
   def splitChunks(doc: Doc, cfg: PipelineConfig): Seq[Chunk] = {
-    val bytes = docBytes(doc.spans)
-    val sorted = doc.spans.sortBy(_.offset)
-    if (bytes <= cfg.megaDocBytes || sorted.length < 2)
-      return Seq(Chunk(doc.doc_id, 0, 1, sorted))
-    val n = math.min(SaltBuckets, sorted.length)
-    val target = math.max(1L, bytes / n)
-    val chunks = Vector.newBuilder[Seq[Span]]
-    var cur = Vector.newBuilder[Span]
-    var curBytes = 0L
-    var emitted = 0
-    var ocrPending = false
-    sorted.foreach { s =>
-      cur += s
-      curBytes += s.text.length.toLong + s.media_ref.length
-      if (s.kind == "media") { if (s.text.nonEmpty) ocrPending = true }
-      else if (s.kind == "text") ocrPending = false
-      if (curBytes >= target && emitted < n - 1 && !ocrPending) {
-        chunks += cur.result(); cur = Vector.newBuilder[Span]
-        curBytes = 0L; emitted += 1
-      }
+    val sorted = Extractor.inOffsetOrder(doc.spans)
+    val ends = chunkEnds(sorted.length, docBytes(sorted), cfg.megaDocBytes)(i => spanBytes(sorted(i)),
+      i => sorted(i).kind == "media" && sorted(i).text.nonEmpty, i => sorted(i).kind == "text")
+    ends.indices.map { k =>
+      Chunk(doc.doc_id, k, ends.length, sorted.slice(if (k == 0) 0 else ends(k - 1), ends(k)))
     }
-    val last = cur.result()
-    if (last.nonEmpty) chunks += last
-    val all = chunks.result()
-    all.zipWithIndex.map { case (ss, i) => Chunk(doc.doc_id, i, all.length, ss) }
+  }
+
+  /** The chunk boundaries of a doc's `n` spans in offset order, `bytes` in
+    * all: the end (exclusive) of each chunk, the last one `n`. Only a
+    * multi-span doc over `megaDocBytes` splits (a single binary payload
+    * parses atomically), into ≤ [[SaltBuckets]] chunks of roughly equal
+    * byte cost. A chunk ends after the span that reaches the byte target,
+    * but never while an OCR transcript is pending: a media span with a
+    * recorded transcript (`setsOcr`) must stay in the same chunk as the
+    * text span (`isText`) that decides the <200-char trigger
+    * (misc.go:38-40). So each chunk is a valid sub-document and merge
+    * reproduces the unsalted output exactly.
+    */
+  private[pipeline] def chunkEnds(n: Int, bytes: Long, megaDocBytes: Long)(
+      cost: Int => Long, setsOcr: Int => Boolean, isText: Int => Boolean): Array[Int] = {
+    if (bytes <= megaDocBytes || n < 2) return Array(n)
+    val most = math.min(SaltBuckets, n)
+    val target = math.max(1L, bytes / most)
+    val ends = new Array[Int](most)
+    var k = 0
+    var curBytes = 0L
+    var ocrPending = false
+    var i = 0
+    while (i < n) {
+      curBytes += cost(i)
+      if (setsOcr(i)) ocrPending = true
+      else if (isText(i)) ocrPending = false
+      if (curBytes >= target && k < most - 1 && !ocrPending) {
+        ends(k) = i + 1; k += 1; curBytes = 0L
+      }
+      i += 1
+    }
+    if (k == 0 || ends(k - 1) < n) { ends(k) = n; k += 1 }
+    java.util.Arrays.copyOf(ends, k)
   }
 
   /** Merge extracted chunks of one doc back into the exact unsalted result:
@@ -218,11 +233,16 @@ object ExtractPipeline {
       }
   }
 
-  /** The salted branch over `mega`, docs routed to it: split into
-    * contiguous span chunks, spread by (doc_id, salt) so one mega-doc fans
-    * across tasks, extract, then regroup + exact merge (cross-chunk
-    * dehyphenator replay), passing each merged row through `fold`. The
-    * spread names no partition count: it starts at the session's
+  /** The salted branch over `mega`, docs routed to it, on Catalyst rows
+    * up to the merge. [[SaltedRows.spanChunks]] splits each doc's span
+    * array as scanned into contiguous chunks; the chunks are spread by
+    * (doc_id, salt) so one mega-doc fans across tasks, and
+    * [[SaltedRows.extractChunk]] runs the kernel on each. The results are
+    * regrouped by doc_id and sorted within each partition, so one doc's
+    * chunks arrive together; only there are they decoded into
+    * [[ChunkResult]]s, for the exact merge (cross-chunk dehyphenator
+    * replay), whose rows pass through `fold`. Neither shuffle names a
+    * partition count: each starts at the session's
     * `spark.sql.shuffle.partitions`, and AQE coalesces it to the bytes and
     * cores at hand (a `repartition(n, ...)` it would leave at n).
     */
@@ -230,11 +250,25 @@ object ExtractPipeline {
       fold: ExtractedDoc => ExtractedDoc): Dataset[ExtractedDoc] = {
     val spark = mega.sparkSession
     import spark.implicits._
-    mega.flatMap(d => splitChunks(d, cfg))
+    val x = cfg.extractor
+    mega.select(col("doc_id"), explode(SaltedRows.SpanChunks(col("spans"), lit(cfg.megaDocBytes))).as("c"))
+      .select(col("doc_id"), col("c.salt").as("salt"), col("c.spans").as("spans"))
       .repartition(col("doc_id"), col("salt"))
-      .map(c => extractChunk(c, cfg))
-      .groupByKey(_.doc_id)
-      .mapGroups((id, it) => fold(mergeChunks(id, it.toSeq)))
+      .select(SaltedRows.ExtractChunk(col("doc_id"), col("salt"), col("spans"),
+        lit(x.removeNewlines), lit(x.maxFileBytes), lit(x.ocrEnabled)).as("r"))
+      .select("r.*")
+      .repartition(col("doc_id"))
+      .sortWithinPartitions(col("doc_id"))
+      .as[ChunkResult]
+      .mapPartitions { rows =>
+        val chunks = rows.buffered
+        Iterator.continually(chunks).takeWhile(_.hasNext).map { it =>
+          val id = it.head.doc_id
+          val doc = Vector.newBuilder[ChunkResult]
+          while (it.hasNext && it.head.doc_id == id) doc += it.next()
+          fold(mergeChunks(id, doc.result()))
+        }
+      }
   }
 
   /** Per-partition metrics (lineage rows): one narrow `mapPartitions` over

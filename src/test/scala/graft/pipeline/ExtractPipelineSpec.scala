@@ -1,16 +1,21 @@
 package graft.pipeline
 
 import graft.core.Extractor
+import graft.functions.{NativeCall, SpanExpressions}
 import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Literal}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.execution.{AppendColumnsWithObjectExec, FileSourceScanExec, InputAdapter, MapGroupsExec, QueryExecution, SerializeFromObjectExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, FileSourceScanExec, InputAdapter, QueryExecution, SerializeFromObjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ExchangeQueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_COL}
 import org.apache.spark.sql.types.{DataType, MapType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
@@ -80,6 +85,23 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val whole = extractWhole(doc)
     assert(whole.spans.map(_.text) == Seq("eine Zeile wei", "", "-Institution folgt "))
     assert(spanKeys(extractSalted(doc, cfg)) == spanKeys(whole))
+  }
+
+  test("row splitter: a null span array gives null, and a null text or media_ref costs 0 bytes") {
+    val nullSpans = Literal(null, SpanExpressions.SpanArray)
+    for ((fn, args) <- Seq(
+        SaltedRows.SpanChunks -> Seq(nullSpans, Literal(4L)),
+        SaltedRows.ExtractChunk -> Seq(Literal("d"), Literal(0), nullSpans, Literal(true), Literal(1L), Literal(true))))
+      assert(NativeCall(fn, args).replacement.eval(InternalRow.empty) == null, fn.name)
+    def span(text: String, ref: String, offset: Int) =
+      InternalRow(UTF8String.fromString("text"), UTF8String.fromString(text), UTF8String.fromString(ref), offset)
+    val spans = new GenericArrayData(Seq[Any](span("aaaa", null, 0), span(null, null, 1), span("bbbb", "", 2)))
+    assert(SpanExpressions.spanByteCost(spans) == 8)
+    val chunks = SaltedRows.spanChunks(spans, 4L)
+    val sizes = (0 until chunks.numElements()).map(k => chunks.getStruct(k, 2).getArray(1).numElements())
+    assert(sizes == Seq(1, 2))
+    val typed = Doc("d", Seq(Span("text", "aaaa", "", 0), Span("text", "", "", 1), Span("text", "bbbb", "", 2)))
+    assert(ExtractPipeline.splitChunks(typed, ExtractPipeline.PipelineConfig(megaDocBytes = 4L)).map(_.spans.length) == sizes)
   }
 
   test("end-to-end Spark extraction on the synthetic corpus") {
@@ -368,8 +390,20 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def has(plan: SparkPlan)(p: SparkPlan => Boolean): Boolean = find(plan)(p).isDefined
 
-  private def saltedChain(p: SparkPlan): Boolean =
-    p.isInstanceOf[MapGroupsExec] || p.isInstanceOf[AppendColumnsWithObjectExec]
+  /** Whether `p` splits docs into salted chunks (calls `span_chunks`). */
+  private def saltedChain(p: SparkPlan): Boolean = p.expressions.exists(_.exists {
+    case s: StaticInvoke => s.functionName == "spanChunks"
+    case _ => false
+  })
+
+  /** The shuffles in `write` that repartition by exactly the columns `keys`. */
+  private def shufflesBy(write: SparkPlan, keys: String*): Seq[ShuffleQueryStageExec] = collect(write) {
+    case q: ShuffleQueryStageExec if q.shuffle.shuffleOrigin == REPARTITION_BY_COL &&
+      (q.shuffle.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.map { case a: AttributeReference => a.name; case e => e.sql } == keys
+        case _ => false
+      }) => q
+  }
 
   /** Whether `p` writes a run's `table` (`output`, `manifest`...) in the
     * store at `root`.
@@ -402,16 +436,20 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    val end = spark.range(1)
+    val (begin, end) = (spark.range(1), spark.range(1))
     try {
+      // listeners hear of executions asynchronously, in order, so the input
+      // write can still reach this one: the commit's executions are the
+      // ones heard between a run just before it and one just after it
+      begin.collect()
       val corpus = spark.read.parquet(input).as[Doc](Encoders.product[Doc])
       Lineage.run(corpus, new ParquetSnapshotStore(root), "r1", cfg)
-      // listeners hear of executions asynchronously, in order: once they
-      // hear of one run after the commit, they have heard of all the commit's
       end.collect()
       eventually(timeout(30.seconds)) { assert(executions.asScala.exists(_ eq end.queryExecution)) }
     } finally spark.listenerManager.unregister(listener)
-    (input, root, executions.asScala.toSeq.takeWhile(_ ne end.queryExecution).map(_.executedPlan))
+    val heard = executions.asScala.toSeq
+    (input, root, heard.drop(heard.indexWhere(_ eq begin.queryExecution) + 1)
+      .takeWhile(_ ne end.queryExecution).map(_.executedPlan))
   }
 
   /** A commit is its output write(s): no SQL execution of the commit
@@ -496,11 +534,18 @@ class ExtractPipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val writes = plans.filter(writesTo(root, "output"))
     writes.foreach(assertOneSerializer)
     assert(!has(writes.head)(saltedChain), "salted chain in the unsalted write")
+    assert(has(writes(1))(saltedChain), "no salted chain in the salted write")
     // the spread is sized by AQE: a repartition by columns, read coalesced
-    val spread = collect(writes(1)) { case q: ShuffleQueryStageExec if q.shuffle.shuffleOrigin == REPARTITION_BY_COL => q }
-    assert(spread.length == 1, "no salted spread by columns")
+    val spread = shufflesBy(writes(1), "doc_id", "salt")
+    assert(spread.length == 1, "no salted spread by (doc_id, salt)")
     assert(collect(writes(1)) { case r: AQEShuffleReadExec => r.child }.contains(spread.head),
       "salted spread not read through AQE")
+    // chunks stay rows up to the regroup: only the merge decodes objects
+    val regroup = shufflesBy(writes(1), "doc_id")
+    assert(regroup.length == 1, "no salted regroup by doc_id")
+    def decoders(p: SparkPlan) = collect(p) { case d: DeserializeToObjectExec => d }
+    assert(decoders(regroup.head).isEmpty, s"objects decoded below the regroup: ${decoders(regroup.head)}")
+    assert(decoders(writes(1)).length == 1, s"decoders in the salted write: ${decoders(writes(1))}")
     assertCommittedReference(root, 40L)
   }
 
